@@ -26,6 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * memory-subsystem, and pure-JVM OCR-pool thread-scaling at the same
   * 8 -> 32 levels, so the "host memory path, not job structure" claim
   * is machine-checkable next to the Spark ratio it explains.
+  *
+  * Isolated A/B timing of a few queries (per-query min of 2 passes):
+  * SPARK_GRAFT_ONLY=q1,q2 SPARK_GRAFT_SCALING=0 SPARK_GRAFT_PROBES=0.
   */
 object Bench {
 

@@ -473,8 +473,7 @@ object SparkEntry {
 
     // Dedup: MinHash-LSH candidate pairs over the cross-engine poly
     // hash family — the FULL shingle->minhash->band->bucket->verify
-    // pipeline is oracle-checked in DuckDB (the xxhash64 variant stays
-    // as the 64-bit-spread API, pinned equal-recall in SketchSpec)
+    // pipeline is oracle-checked in DuckDB
     "dd_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLshPairsPoly(docs(s, dir), bands = 8, rowsPerBand = 4, threshold = 0.8)),
 

@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 /** Dev-only plan auditor: print each named SparkEntry query's SHUFFLE
   * count and its Exchange/Scan lines (the two plan features every
   * scale review here starts from — shuffle structure and what reaches
-  * the parquet scan). Broadcast exchanges are counted separately:
-  * they are the cheap kind, and folding them into the headline number
-  * sends reviewers chasing phantom shuffles. Usage:
+  * the parquet scan), then its full `explain("formatted")` plan, the
+  * text a before/after plan diff compares. Broadcast exchanges are
+  * counted separately: they are the cheap kind, and folding them into
+  * the headline number sends reviewers chasing phantom shuffles.
+  * Usage (redirect stdout to keep a plan, e.g. under plans/):
   *   sbt 'runMain graft.cli.PlanAudit <sfDir> <query> [query...]'
   */
 object PlanAudit {
@@ -21,11 +23,13 @@ object PlanAudit {
     spark.stop()
   }
 
-  /** Session-agnostic body (CliSmokeSpec-coverable). */
-  def run(spark: SparkSession, sfDir: String, queries: Seq[String]): Unit =
-    for (q <- queries) {
-      val df = graft.SparkEntry.queries(q)(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
+  /** Session-agnostic body (CliSmokeSpec-coverable); returns each
+    * query's formatted plan in argument order.
+    */
+  def run(spark: SparkSession, sfDir: String, queries: Seq[String]): Seq[(String, String)] =
+    for (q <- queries) yield {
+      val qe = graft.SparkEntry.queries(q)(spark, sfDir).queryExecution
+      val plan = qe.executedPlan.toString
       // word-anchored: bare "Exchange " would also hit ReusedExchange /
       // BroadcastExchange lines and inflate the one number this tool
       // exists to report accurately (round-5 advice). Reused exchanges
@@ -37,5 +41,8 @@ object PlanAudit {
       println(s"=== $q: $shuffles shuffles, $bcast broadcasts, $reused reused")
       println(plan.linesIterator.filter(l => l.contains("Exchange") || l.contains("Scan "))
         .mkString("\n").take(2500))
+      val formatted = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+      println(formatted)
+      q -> formatted
     }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * GraftFunctions.register: the normalizers, the sketch family
   * (minhash / simhash / shingles / jaccard), and the embedding
   * kernels. Integer parameters are taken as foldable literals
-  * (`minhash_signature(toks, 32)`), the same contract as Spark's own
+  * (`minhash_poly_buckets(toks, 8, 4)`), the same contract as Spark's own
   * parameterized builtins.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
@@ -68,12 +68,9 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     register(ext, "normalize_arabic_basic", 1)(c => NormalizeArabicBasic(c.head))
     register(ext, "normalize_arabic_enhanced", 1)(c => NormalizeArabicEnhanced(c.head))
     // sketch family (array<string> tokens -> sketches / hashed sets)
-    register(ext, "minhash_signature", 2)(c =>
-      MinHashSignature(c(0), intLit(c(1), "minhash_signature", 1)))
     register(ext, "minhash_poly_buckets", 3)(c =>
       MinHashPolyBuckets(c(0), intLit(c(1), "minhash_poly_buckets", 1),
         intLit(c(2), "minhash_poly_buckets", 2)))
-    register(ext, "simhash64", 1)(c => SimHash64(c.head))
     register(ext, "simhash_poly", 1)(c => SimHashPoly(c.head))
     register(ext, "shingle_hashes", 2)(c =>
       ShingleHashes(c(0), intLit(c(1), "shingle_hashes", 1)))

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
 object IvfKernel {
   /** The `nProbe` nearest centroids by squared L2, ties broken by cell
     * id — the same (distance, cell) struct ordering as the Column twin
-    * (Similarity.ivfProbeCellsColRef), with the same sequential
-    * double-fold distance, so results are identical.
+    * (ReferenceColumns.ivfProbeCellsColRef in the tests), with the
+    * same sequential double-fold distance, so results are identical.
     */
   def probeCells(emb: ArrayData, cents: Array[Array[Double]], nProbe: Int): ArrayData = {
     val k = cents.length

@@ -1,40 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** JVM-side sketch kernels shared by eval and codegen.
-  *
-  * Both replicate their Column-twin semantics bit-for-bit
-  * (property-tested in SketchSpec):
-  *   - minhash: sig(p) = min over tokens of xxhash64(token, p), where
-  *     Spark's xxhash64(t, lit(p)) folds as hashLong(p, seed =
-  *     hashBytes(t, 42)). The token is therefore hashed ONCE and each
-  *     permutation is a single long-mix — the Column twin re-traverses
-  *     the token array (and re-hashes every token) once per
-  *     permutation.
-  *   - simhash: per bit b, sum +-1 of bit b of xxhash64(token) over
-  *     tokens; bit set iff sum > 0. The Column twin allocates a
-  *     64-element array per token inside an interpreted aggregate.
+/** JVM-side sketch kernels shared by eval and codegen: the
+  * cross-engine polynomial sketch family. It uses the polynomial
+  * rolling hash already proven cross-engine by TextStats.fingerprint:
+  * every step is integer arithmetic below 2^63, identical in Java,
+  * Catalyst and DuckDB SQL — so the ENTIRE shingle->minhash->band->
+  * bucket pipeline is oracle-checkable end to end. Each token is
+  * hashed once; each permutation is one multiply-add (pinned against
+  * an independent Scala restatement in SketchSpec/SketchKernelProps).
   */
 object SketchKernels {
-  private val DefaultSeed = 42L
-
-  @inline private def tokenHash(t: UTF8String): Long =
-    XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes, DefaultSeed)
-
-  // ---- cross-engine polynomial sketch family -----------------------------
-  //
-  // The xxhash64 sketches above are the widest-spread (64-bit) variants
-  // but cannot be restated in DuckDB. This family uses the polynomial
-  // rolling hash already proven cross-engine by TextStats.fingerprint:
-  // every step is integer arithmetic below 2^63, identical in Java,
-  // Catalyst and DuckDB SQL — so the ENTIRE shingle->minhash->band->
-  // bucket pipeline is oracle-checkable end to end.
 
   /** Field modulus (2^31 - 1, prime). */
   val PolyM = 2147483647L
@@ -101,21 +83,10 @@ object SketchKernels {
     * multiply-add per permutation.
     */
   def minhashPoly(tokens: ArrayData, perms: Int): ArrayData = {
-    val sig = new Array[Long](perms)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    val n = tokens.numElements()
+    val bases = new Array[Long](tokens.numElements())
     var ti = 0
-    while (ti < n) {
-      val base = polyHash(tokens.getUTF8String(ti))
-      var p = 0
-      while (p < perms) {
-        val h = (permA(p) * base + permB(p)) % PolyM
-        if (h < sig(p)) sig(p) = h
-        p += 1
-      }
-      ti += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(sig)
+    while (ti < bases.length) { bases(ti) = polyHash(tokens.getUTF8String(ti)); ti += 1 }
+    permutationMins(bases, perms)
   }
 
   /** Band buckets from a poly-minhash signature: bucket(b) = left fold
@@ -136,19 +107,31 @@ object SketchKernels {
     * oracle-exact; the DuckDB twin divides by 2^31.)
     */
   def minhashPolyFromCombined(hashes: ArrayData, perms: Int): ArrayData = {
-    val sig = new Array[Long](perms)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    val n = hashes.numElements()
+    val bases = hashes.toLongArray()
     var ti = 0
-    while (ti < n) {
-      val base = hashes.getLong(ti) >>> 31
-      var p = 0
-      while (p < perms) {
-        val h = (permA(p) * base + permB(p)) % PolyM
-        if (h < sig(p)) sig(p) = h
-        p += 1
+    while (ti < bases.length) { bases(ti) = bases(ti) >>> 31; ti += 1 }
+    permutationMins(bases, perms)
+  }
+
+  /** sig(p) = min over `bases` of (A_p * base + B_p) mod PolyM — the
+    * loop both signature faces share. Permutations run outermost, so
+    * A_p/B_p are derived once per call, not once per token.
+    */
+  private def permutationMins(bases: Array[Long], perms: Int): ArrayData = {
+    val sig = new Array[Long](perms)
+    var p = 0
+    while (p < perms) {
+      val a = permA(p)
+      val b = permB(p)
+      var m = Long.MaxValue
+      var ti = 0
+      while (ti < bases.length) {
+        val h = (a * bases(ti) + b) % PolyM
+        if (h < m) m = h
+        ti += 1
       }
-      ti += 1
+      sig(p) = m
+      p += 1
     }
     UnsafeArrayData.fromPrimitiveArray(sig)
   }
@@ -322,78 +305,6 @@ object SketchKernels {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-
-  def minhash(tokens: ArrayData, perms: Int): ArrayData = {
-    val sig = new Array[Long](perms)
-    java.util.Arrays.fill(sig, Long.MaxValue)
-    val n = tokens.numElements()
-    var ti = 0
-    while (ti < n) {
-      val base = tokenHash(tokens.getUTF8String(ti))
-      var p = 0
-      while (p < perms) {
-        // the Column twin folds xxhash64(token, lit(p)) with an INT
-        // literal, so the per-permutation mix is hashInt, not hashLong
-        val h = XXH64.hashInt(p, base)
-        if (h < sig(p)) sig(p) = h
-        p += 1
-      }
-      ti += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(sig)
-  }
-
-  def simhash(tokens: ArrayData): Long = {
-    val sums = new Array[Int](64)
-    val n = tokens.numElements()
-    var ti = 0
-    while (ti < n) {
-      val h = tokenHash(tokens.getUTF8String(ti))
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) sums(b) += 1 else sums(b) -= 1
-        b += 1
-      }
-      ti += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (sums(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
-}
-
-/** MinHash signature over an array<string> of tokens: `perms`
-  * permutations approximated by seeded xxhash64 minima.
-  */
-case class MinHashSignature(child: Expression, perms: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature"
-  override def nullable: Boolean = true
-
-  // null OR EMPTY tokens -> null signature: a non-null sentinel (the
-  // Long.MaxValue fill an empty fold would leave) would send every
-  // empty/whitespace-only doc into the SAME bucket of every band,
-  // manufacturing exactly the hot bucket the null propagation is
-  // designed out of. Callers filter null signatures before banding.
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val arr = v.asInstanceOf[ArrayData]
-      if (arr.numElements() == 0) null else SketchKernels.minhash(arr, perms)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""
-         |if ($t.numElements() == 0) { ${ev.isNull} = true; }
-         |else { ${ev.value} = graft.functions.SketchKernels.minhash($t, $perms); }
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Sorted distinct cross-engine poly hashes of the word n-gram
@@ -462,7 +373,11 @@ case class SortedLongJaccard(left: Expression, right: Expression)
 
 /** Band-bucket array of the cross-engine poly-MinHash (one single
   * pass: token poly-hashed once, `bands * rowsPerBand` mixes, bands
-  * folded). Null/empty tokens -> null, like MinHashSignature.
+  * folded). Null OR EMPTY tokens -> null: a non-null sentinel (the
+  * Long.MaxValue an empty fold would leave) would send every
+  * empty/whitespace-only doc into the SAME bucket of every band,
+  * manufacturing exactly the hot bucket the null propagation is
+  * designed out of. Callers filter null buckets before banding.
   */
 case class MinHashPolyBuckets(child: Expression, bands: Int, rowsPerBand: Int)
     extends UnaryExpression {
@@ -564,35 +479,6 @@ case class SimHashPoly(child: Expression) extends UnaryExpression {
       s"""
          |if ($t.numElements() == 0) { ${ev.isNull} = true; }
          |else { ${ev.value} = graft.functions.SketchKernels.simhashPoly($t); }
-       """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash over an array<string> of tokens. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override def nullable: Boolean = true
-
-  // null OR EMPTY -> null (same rationale as MinHashSignature): the 0L
-  // an empty fold would produce pairs every empty-token doc at hamming
-  // distance 0
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val arr = v.asInstanceOf[ArrayData]
-      if (arr.numElements() == 0) null else SketchKernels.simhash(arr)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""
-         |if ($t.numElements() == 0) { ${ev.isNull} = true; }
-         |else { ${ev.value} = graft.functions.SketchKernels.simhash($t); }
        """.stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

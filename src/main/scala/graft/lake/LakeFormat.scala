@@ -128,7 +128,9 @@ object ZOrderLake {
   * the data stranded in `.compact-old` — `compact` recovers that
   * window on entry by renaming `.compact-old` back before starting,
   * so a re-run always sees the full source (the Iceberg-snapshot
-  * residual, same note as IngestIndex.compactState).
+  * residual, same note as IngestIndex.compactState). A `.compact-old`
+  * beside a live table (crash after both renames) is a stale copy and
+  * is deleted on entry.
   */
 object CompactLake {
   import org.apache.hadoop.fs.Path
@@ -162,9 +164,13 @@ object CompactLake {
     // recover-on-entry (r06 advice): a crash between the two swap
     // renames below leaves `dir` missing and the source stranded in
     // `.compact-old` — restore it before listing so the re-run
-    // compacts the full source instead of failing on a missing dir
+    // compacts the full source instead of failing on a missing dir.
+    // A crash after both renames leaves `dir` complete and a stale
+    // full copy in `.compact-old`; with `dir` present that copy is
+    // always safe to drop, so it goes now rather than at the next swap
     val oldDir = new Path(dir + ".compact-old")
-    if (!fs.exists(new Path(dir)) && fs.exists(oldDir))
+    if (fs.exists(new Path(dir))) fs.delete(oldDir, true)
+    else if (fs.exists(oldDir))
       require(fs.rename(oldDir, new Path(dir)),
         s"crash recovery failed: cannot restore $oldDir to $dir")
     val files = fs.listStatus(new Path(dir))
@@ -194,11 +200,9 @@ object CompactLake {
       fs.rename(part.head.getPath, new Path(out, f"part-bin-$i%05d.parquet"))
     }
     fs.delete(tmp, true)
-    val old = new Path(dir + ".compact-old")
-    fs.delete(old, true)
-    require(fs.rename(new Path(dir), old), s"swap failed for $dir")
+    require(fs.rename(new Path(dir), oldDir), s"swap failed for $dir")
     require(fs.rename(out, new Path(dir)), s"swap-in failed for $dir")
-    fs.delete(old, true)
+    fs.delete(oldDir, true)
     (files.length, big.length + bins.length)
   }
 }

@@ -346,11 +346,6 @@ object Dedup {
     docs.withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
   }
 
-  /** Word-set Jaccard similarity as a Column over two token arrays. */
-  def jaccardCol(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_distinct(concat(a, b))).cast("double")
-
   /** Sorted distinct cross-engine 62-bit combined poly hashes of the
     * word-SET tokens (ShingleHashes at width 1 — post-hash dedupe ≡
     * distinct words then hash, collisions collapsing identically in
@@ -411,34 +406,6 @@ object Dedup {
     windowedShinglePairs(docs, 1, idWindow, "jaccard",
       mergeJaccard, jaccardSizeOk(threshold), threshold)
 
-  /** MinHash signature column: `perms` permutations approximated by
-    * seeded xxhash64 of each token; signature(i) = min over tokens.
-    * Catalyst-HOF reference form — kept as the property-tested twin of
-    * the native expression below (SketchSpec), NOT used in the hot
-    * path: it re-traverses (and re-hashes) the token array once per
-    * permutation in interpreted HOFs. Empty token arrays yield null
-    * (matching the native expression — see MinHashSignature's
-    * hot-bucket rationale).
-    */
-  def minhashSignatureCol(tokens: Column, perms: Int): Column =
-    when(size(tokens) > 0,
-      array((0 until perms).map { i =>
-        array_min(transform(tokens, t => xxhash64(t, lit(i))))
-      }: _*))
-
-  /** Native single-pass MinHash signature (hashes each token once,
-    * one int-mix per permutation; codegen'd).
-    */
-  def minhashSignature(tokens: Column, perms: Int): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.MinHashSignature(
-      ColumnBridge.expression(tokens), perms))
-  }
-
-  /** MinHash-LSH candidate pairs: signatures banded `bands` x
-    * `rowsPerBand`; docs sharing any band bucket are candidates,
-    * verified with true token Jaccard >= threshold.
-    */
   /** Default cap on LSH bucket population. A degenerate corpus (every
     * doc similar) makes some buckets hold a large fraction of the
     * corpus, turning the candidate join quadratic; dropping hot
@@ -490,25 +457,6 @@ object Dedup {
       .join(withToks.select(col("doc_id").as("id_a"), col("toks").as("toks_a")), "id_a")
       .join(withToks.select(col("doc_id").as("id_b"), col("toks").as("toks_b")), "id_b")
       .select(col("id_a"), col("id_b"), round(mergeJac, 6).as("jaccard"))
-  }
-
-  def minhashLshPairs(docs: DataFrame, bands: Int, rowsPerBand: Int, threshold: Double,
-                      maxBucketSize: Int = MaxBucketSize): DataFrame = {
-    val perms = bands * rowsPerBand
-    // string tokens feed the signature; sorted hash sets feed the
-    // verify (column pruning keeps each branch to its own column)
-    val withToks = docs.select(col("doc_id"), tokensCol(col("text")).as("toks_str"),
-      tokenHashesCol(col("text")).as("toks"))
-    val banded = withToks
-      .withColumn("sig", minhashSignature(col("toks_str"), perms))
-      .where(col("sig").isNotNull) // empty-token docs sketch nothing
-      .select(
-        col("doc_id"),
-        posexplode(array((0 until bands).map { b =>
-          xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)), lit(b))
-        }: _*)).as(Seq("band", "bucket")))
-    lshPairsVerified(withToks, dropHotBuckets(banded, Seq("band", "bucket"), maxBucketSize))
-      .where(col("jaccard") >= threshold)
   }
 
   /** Shared spine of every poly-banded MinHash pipeline: sketches +
@@ -922,75 +870,16 @@ object Dedup {
   }
 
   /** MinHash-LSH candidate pairs over the CROSS-ENGINE polynomial hash
-    * family (SketchKernels.minhashPoly): identical band->bucket->verify
-    * pipeline to `minhashLshPairs`, but every step is restatable in
-    * DuckDB SQL — this is the oracle-checked face of the LSH operator
-    * (minhashLshOracleSql generates the oracle from the same
-    * constants).
+    * family (SketchKernels.minhashPoly): signatures banded `bands` x
+    * `rowsPerBand`; docs sharing any band bucket are candidates,
+    * verified with true token Jaccard >= threshold. Every step is
+    * restatable in DuckDB SQL (minhashLshOracleSql generates the
+    * oracle from the same constants).
     */
   def minhashLshPairsPoly(docs: DataFrame, bands: Int, rowsPerBand: Int, threshold: Double,
                           maxBucketSize: Int = MaxBucketSize): DataFrame = {
     val (withToks, cold) = coldBandedPoly(docs, Nil, bands, rowsPerBand, maxBucketSize)
     lshPairsVerified(withToks, cold).where(col("jaccard") >= threshold)
-  }
-
-  /** 64-bit SimHash from token hashes, as Catalyst expressions: for
-    * each bit b, sum +-1 over tokens by that bit of xxhash64(token);
-    * bit set iff the sum is positive. Reference twin of the native
-    * expression (it allocates a 64-wide array per token inside an
-    * interpreted aggregate — SketchSpec pins equality).
-    */
-  def simhashRefCol(tokens: Column): Column = {
-    val hashes = transform(tokens, t => xxhash64(t))
-    val bitIdx = sequence(lit(0), lit(63))
-    val sums = aggregate(hashes, array_repeat(lit(0), 64),
-      (acc, h) => zip_with(acc, bitIdx,
-        (a, b) => a + when(call_function("shiftright", h, b).bitwiseAND(1) === 1, 1).otherwise(-1)))
-    aggregate(
-      zip_with(sums, bitIdx,
-        (s, b) => when(s > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
-
-  /** SimHash near-dup pairs: block on the 4 16-bit quarters (a pair
-    * within hamming distance <= 12 shares at least one exact quarter
-    * only heuristically; quarter blocking is the standard recall/cost
-    * trade — verified pairs are filtered by true hamming distance).
-    */
-  /** Native single-pass SimHash (hashes each token once, no per-token
-    * allocation; codegen'd).
-    */
-  def simhashCol(tokens: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.SimHash64(ColumnBridge.expression(tokens)))
-  }
-
-  private def simhashPairsFromBlocked(blocked: DataFrame, maxHamming: Int,
-                                      maxBucketSize: Int): DataFrame = {
-    val cold = dropHotBuckets(blocked, Seq("q", "block"), maxBucketSize)
-    val a = cold.as("a"); val b = cold.as("b")
-    a.join(b,
-        col("a.q") === col("b.q") && col("a.block") === col("b.block") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-  }
-
-  def simhashPairs(docs: DataFrame, maxHamming: Int,
-                   maxBucketSize: Int = MaxBucketSize): DataFrame = {
-    // one signature pass, materialized (r07): the blocked table is
-    // consumed four times downstream and each reference re-ran the
-    // text scan + SimHash otherwise; the checkpoint is 2 longs per doc
-    val sh = docs.select(col("doc_id"), simhashCol(tokensCol(col("text"))).as("simhash"))
-      .where(col("simhash").isNotNull)
-      .localCheckpoint(false)
-    val blocked = sh.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map { q =>
-        shiftright(col("simhash"), q * 16).bitwiseAND(0xffffL)
-      }: _*)).as(Seq("q", "block")))
-    simhashPairsFromBlocked(blocked, maxHamming, maxBucketSize)
   }
 
   /** Native cross-engine 30-bit poly-SimHash column. */
@@ -1009,16 +898,16 @@ object Dedup {
     * Default 3 chunks of 10 bits. 10-bit chunks saturate on dense
     * self-similar corpora (2^10 buckets — BASELINE.md); raising
     * `blocks` (5 x 6-bit, 6 x 5-bit) trades candidate volume for
-    * recall at hamming <= blocks-1. `blocks` must divide 30; the
-    * 64-bit xxhash64-quarters variant (`simhashPairs`) stays the
-    * production default for high-density corpora.
+    * recall at hamming <= blocks-1. `blocks` must divide 30.
     */
   def simhashPairsPoly(docs: DataFrame, maxHamming: Int,
                        maxBucketSize: Int = MaxBucketSize, blocks: Int = 3): DataFrame = {
     import graft.functions.SketchKernels.PolySimBits
     require(PolySimBits % blocks == 0, s"blocks=$blocks must divide $PolySimBits")
     val width = PolySimBits / blocks
-    // one signature pass, materialized (r07) — see simhashPairs
+    // one signature pass, materialized (r07): the blocked table is
+    // consumed four times downstream and each reference re-ran the
+    // text scan + SimHash otherwise; the checkpoint is 2 longs per doc
     val sh = docs.select(col("doc_id"), simhashPolyCol(tokensCol(col("text"))).as("simhash"))
       .where(col("simhash").isNotNull)
       .localCheckpoint(false)
@@ -1026,7 +915,15 @@ object Dedup {
       posexplode(array((0 until blocks).map { q =>
         shiftright(col("simhash"), q * width).bitwiseAND((1L << width) - 1)
       }: _*)).as(Seq("q", "block")))
-    simhashPairsFromBlocked(blocked, maxHamming, maxBucketSize)
+    val cold = dropHotBuckets(blocked, Seq("q", "block"), maxBucketSize)
+    val a = cold.as("a"); val b = cold.as("b")
+    a.join(b,
+        col("a.q") === col("b.q") && col("a.block") === col("b.block") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
+      .distinct()
+      .where(col("hamming") <= maxHamming)
   }
 
   /** Near-duplicate CLUSTER resolution: connected components over a

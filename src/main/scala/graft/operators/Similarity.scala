@@ -15,14 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Sequential-fold dot product of two float vectors in double —
-    * Catalyst-HOF reference form (twin of the native expression;
-    * SketchSpec pins bit-identical results).
-    */
-  def dotColRef(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Native dot product (primitive loop in codegen, same fold order). */
   def dotCol(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
@@ -147,29 +139,9 @@ object Similarity {
     * restated verbatim in the DuckDB oracles (lshBucketSql) — that is
     * what makes the approximate LSH results oracle-checkable.
     */
-  private val PlaneMixA = 131071L
-  private val PlaneMixB = 2654435761L
-  private val PlaneMod = 1000001L
-
-  private def planeWeight(p: Int, d: Column): Column =
-    ((((lit(p.toLong * PlaneMixA) + d) * PlaneMixB) % PlaneMod).cast("double") - 500000.0) / 500000.0
-
-  /** Sign-of-projection LSH bucket, Catalyst-HOF reference form: the
-    * projection is a SEQUENTIAL left fold in double (aggregate), so
-    * the oracle's list_reduce fold and the native kernel reproduce it
-    * bit-for-bit. Kept as the property-tested twin (SketchSpec), NOT
-    * the hot path — interpreted HOFs allocate per plane per row.
-    */
-  def lshBucketColRef(emb: Column, planes: Int): Column = {
-    val bits = (0 until planes).map { p =>
-      val proj = aggregate(
-        zip_with(emb, sequence(lit(0), size(emb) - 1),
-          (x, d) => x.cast("double") * planeWeight(p, d)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
+  private[operators] val PlaneMixA = 131071L
+  private[operators] val PlaneMixB = 2654435761L
+  private[operators] val PlaneMod = 1000001L
 
   /** Native LSH bucket (primitive loop in codegen, same fold order). */
   def lshBucketCol(emb: Column, planes: Int): Column = {
@@ -266,41 +238,6 @@ object Similarity {
        |SELECT id_a, id_b, cosine FROM p WHERE cosine >= $threshold""".stripMargin
 
   // ---- IVF (inverted-file) ANN: the second scale path ------------------
-
-  /** Centroids as ONE 2-D array literal. Expanding each centroid into
-    * its own expression subtree (k aggregates over dim literals each)
-    * makes the plan O(k*dim) — planning/codegen then dwarfs execution
-    * (40s for k=16, dim=64). A single typedlit keeps the plan O(1).
-    * Cell id == centroid position (ids are dense 0..k-1 by
-    * construction in kmeansCentroids).
-    */
-  private def centArrayCol(centroids: Array[(Int, Array[Double])]): Column =
-    typedlit(centroids.sortBy(_._1).map(_._2.toSeq).toSeq)
-
-  /** (squared-L2-distance, cell) structs for every centroid, smallest
-    * first under struct ordering — distance first, cell id as the
-    * deterministic tie-break.
-    */
-  private def cellStructsCol(emb: Column, centroids: Array[(Int, Array[Double])]): Column =
-    zip_with(
-      transform(centArrayCol(centroids), c =>
-        aggregate(
-          zip_with(emb, c, (x, cc) => (x.cast("double") - cc) * (x.cast("double") - cc)),
-          lit(0.0), (acc, d) => acc + d)),
-      sequence(lit(0), lit(centroids.length - 1)),
-      (d, i) => call_function("named_struct", lit("d"), d, lit("cell"), i))
-
-  /** Nearest-centroid cell id, Catalyst-HOF reference form (argmin via
-    * struct array_min) — the property-tested twin of the native
-    * expression below, NOT the hot path.
-    */
-  def ivfCellColRef(emb: Column, centroids: Array[(Int, Array[Double])]): Column =
-    array_min(cellStructsCol(emb, centroids)).getField("cell")
-
-  /** The `nProbe` nearest cells, HOF reference form (twin). */
-  def ivfProbeCellsColRef(emb: Column, centroids: Array[(Int, Array[Double])], nProbe: Int): Column =
-    transform(slice(array_sort(cellStructsCol(emb, centroids)), 1, nProbe),
-      s => s.getField("cell"))
 
   private def centroidMatrix(centroids: Array[(Int, Array[Double])]): Seq[Seq[Double]] =
     centroids.sortBy(_._1).map(_._2.toSeq).toSeq

@@ -146,4 +146,23 @@ class LakeSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".parquet")).head
     assert(kept.length == bigBytes, "oversize file must not be rewritten")
   }
+
+  test("compaction: a stale .compact-old beside a live table is dropped on entry, rows unchanged") {
+    val root = Files.createTempDirectory("graft-compact-stale").toString
+    val dir = root + "/t"
+    spark.range(0, 400).select(col("id"), concat(lit("row-"), col("id")).as("text"))
+      .repartition(8).write.parquet(dir)
+    val before = spark.read.parquet(dir).as[(Long, String)].collect().toSet
+    // the full stale copy a crash after both swap renames leaves behind
+    spark.range(0, 50).select(col("id"), lit("stale").as("text")).write.parquet(dir + ".compact-old")
+    def leftovers = new java.io.File(root).list().filter(_.contains(".compact-")).toSeq.sorted
+    // a run that fails before its swap (here: an invalid target) must
+    // still have cleared the stale copy on entry
+    intercept[IllegalArgumentException](CompactLake.compact(spark, dir, targetBytes = 0L))
+    assert(leftovers.isEmpty, s"stale entries survive a failed run: $leftovers")
+    CompactLake.compact(spark, dir, targetBytes = 1L << 20)
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == before,
+      "compaction must not change a single row")
+    assert(leftovers.isEmpty, s"stale entries survive compaction: $leftovers")
+  }
 }

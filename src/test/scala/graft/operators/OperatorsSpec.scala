@@ -42,21 +42,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Dedup.exactDedup(df).count() == df.count() - 1)
   }
 
-  test("minhash-lsh: planted near-dups recovered with jaccard >= 0.8") {
-    val pairs = Dedup.minhashLshPairs(corpus(), bands = 8, rowsPerBand = 4, threshold = 0.8)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((11L, 201L)), s"exact dup pair missing from $pairs")
-    assert(pairs.contains((10L, 200L)) || pairs.contains((12L, 202L)),
-      s"no near-dup pair recovered: $pairs")
-  }
-
-  test("simhash: exact dup has hamming 0; near-dups within threshold") {
-    val pairs = Dedup.simhashPairs(corpus(), maxHamming = 8)
-      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
-    val exact = pairs.find(p => p._1 == 11L && p._2 == 201L)
-    assert(exact.exists(_._3 == 0), s"exact dup hamming: $exact")
-  }
-
   test("near-dup components: star contraction resolves chains and singleton pairs") {
     // a 12-node path (worst diameter case), two small clusters, and an
     // isolated pair
@@ -158,6 +143,8 @@ class OperatorsSpec extends AnyFunSuite {
     val pairs = Dedup.minhashLshPairsPoly(withEmpty, bands = 8, rowsPerBand = 4, threshold = 0.8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((11L, 201L)), s"exact dup pair missing from poly LSH: $pairs")
+    assert(pairs.contains((10L, 200L)) || pairs.contains((12L, 202L)),
+      s"no near-dup pair recovered by poly LSH: $pairs")
     assert(!pairs.contains((300L, 301L)),
       "whitespace-only docs must not pair (null sketch, not a sentinel bucket)")
     val sh = Dedup.simhashPairsPoly(withEmpty, maxHamming = 8)

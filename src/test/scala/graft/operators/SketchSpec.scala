@@ -4,9 +4,11 @@ import graft.pipeline.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Native sketch expressions == Catalyst-HOF reference twins,
-  * bit-for-bit, on adversarial token arrays (the banding/blocking
-  * downstream is only correct if the signatures agree exactly).
+/** Native sketch and embedding expressions == independent reference
+  * forms (plain Scala for the poly sketches, Catalyst-HOF twins in
+  * ReferenceColumns for the embedding kernels), bit-for-bit, on
+  * adversarial inputs (the banding/blocking downstream is only correct
+  * if the signatures agree exactly).
   */
 class SketchSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -21,33 +23,11 @@ class SketchSpec extends AnyFunSuite {
     }
   }
 
-  test("minhash: native expression == HOF twin on 200 random token arrays") {
-    val df = tokenArrays(200).toDF("toks")
-    val rows = df.select(
-      Dedup.minhashSignature(col("toks"), 32).as("native"),
-      Dedup.minhashSignatureCol(col("toks"), 32).as("ref"))
-      .as[(Seq[Long], Seq[Long])].collect()
-    rows.zipWithIndex.foreach { case ((native, ref), i) =>
-      assert(native == ref, s"signature diverges on row $i")
-    }
-  }
-
-  test("simhash: native expression == HOF twin on 200 random token arrays") {
-    val df = tokenArrays(200).toDF("toks")
-    val rows = df.select(
-      Dedup.simhashCol(col("toks")).as("native"),
-      Dedup.simhashRefCol(col("toks")).as("ref"))
-      .as[(Long, Long)].collect()
-    rows.zipWithIndex.foreach { case ((native, ref), i) =>
-      assert(native == ref, s"simhash diverges on row $i")
-    }
-  }
-
   test("null propagation: null tokens/vectors -> null sketch/score (twin parity)") {
     val df = Seq[Option[Seq[String]]](Some(Seq("a", "b")), None).toDF("toks")
     val rows = df.select(
-      Dedup.minhashSignature(col("toks"), 8).isNull.as("mh_null"),
-      Dedup.simhashCol(col("toks")).isNull.as("sh_null")).as[(Boolean, Boolean)].collect()
+      Dedup.minhashPolyBuckets(col("toks"), 4, 2).isNull.as("mh_null"),
+      Dedup.simhashPolyCol(col("toks")).isNull.as("sh_null")).as[(Boolean, Boolean)].collect()
     assert(rows.toSeq == Seq((false, false), (true, true)),
       "null token arrays must yield null sketches, never a shared sentinel bucket")
     val vecs = Seq[(Option[Seq[Float]], Seq[Float])](
@@ -57,20 +37,17 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("EMPTY token arrays -> null sketches on every variant (no shared sentinel bucket)") {
-    // an empty (non-null) array previously produced [Long.MaxValue,...]
-    // from the native kernel but nulls from the HOF twin — and every
-    // whitespace-only doc shared one sentinel signature, recreating the
-    // hot-bucket problem null propagation exists to prevent
+    // an empty (non-null) array folded to a [Long.MaxValue,...]
+    // sentinel would put every whitespace-only doc in one shared
+    // bucket, recreating the hot-bucket problem null propagation exists
+    // to prevent
     val df = Seq(Seq.empty[String], Seq("a")).toDF("toks")
     val nulls = df.select(
-      Dedup.minhashSignature(col("toks"), 8).isNull,
-      Dedup.minhashSignatureCol(col("toks"), 8).isNull,
-      Dedup.simhashCol(col("toks")).isNull,
       Dedup.minhashPolyBuckets(col("toks"), 4, 2).isNull,
       Dedup.simhashPolyCol(col("toks")).isNull)
-      .as[(Boolean, Boolean, Boolean, Boolean, Boolean)].collect()
-    assert(nulls(0) == ((true, true, true, true, true)), s"empty array: ${nulls(0)}")
-    assert(nulls(1) == ((false, false, false, false, false)), s"non-empty: ${nulls(1)}")
+      .as[(Boolean, Boolean)].collect()
+    assert(nulls(0) == ((true, true)), s"empty array: ${nulls(0)}")
+    assert(nulls(1) == ((false, false)), s"non-empty: ${nulls(1)}")
   }
 
   // independent plain-Scala reimplementation of the poly sketch family
@@ -116,7 +93,7 @@ class SketchSpec extends AnyFunSuite {
     }
     val rows = pairs.toDF("a", "b").select(
       Similarity.dotCol(col("a"), col("b")).as("native"),
-      Similarity.dotColRef(col("a"), col("b")).as("ref"))
+      ReferenceColumns.dotColRef(col("a"), col("b")).as("ref"))
       .as[(Double, Double)].collect()
     rows.zipWithIndex.foreach { case ((native, ref), i) =>
       // bit-identical, not epsilon: same fold order by construction
@@ -133,7 +110,7 @@ class SketchSpec extends AnyFunSuite {
     }
     val rows = vecs.toDF("e").select(
       Similarity.lshBucketCol(col("e"), 8).as("native"),
-      Similarity.lshBucketColRef(col("e"), 8).as("ref"))
+      ReferenceColumns.lshBucketColRef(col("e"), 8).as("ref"))
       .as[(Long, Long)].collect()
     rows.zipWithIndex.foreach { case ((native, ref), i) =>
       assert(native == ref, s"lsh bucket diverges on row $i: $native vs $ref")
@@ -148,7 +125,7 @@ class SketchSpec extends AnyFunSuite {
     for (nProbe <- Seq(1, 3, 12)) {
       val rows = vecs.toDF("e").select(
         Similarity.ivfProbeCellsCol(col("e"), cents, nProbe).as("native"),
-        Similarity.ivfProbeCellsColRef(col("e"), cents, nProbe).as("ref"))
+        ReferenceColumns.ivfProbeCellsColRef(col("e"), cents, nProbe).as("ref"))
         .as[(Seq[Int], Seq[Int])].collect()
       rows.zipWithIndex.foreach { case ((native, ref), i) =>
         assert(native == ref, s"probe cells diverge (nProbe=$nProbe) on row $i: $native vs $ref")
@@ -167,7 +144,7 @@ class SketchSpec extends AnyFunSuite {
       Seq(0f, 0f, 0f, 0f))
     val lsh = vecs.toDF("e").select(
       Similarity.lshBucketCol(col("e"), 6).as("native"),
-      Similarity.lshBucketColRef(col("e"), 6).as("ref"))
+      ReferenceColumns.lshBucketColRef(col("e"), 6).as("ref"))
       .as[(Long, Long)].collect()
     lsh.zipWithIndex.foreach { case ((n, r), i) =>
       assert(n == r, s"lsh bucket diverges on non-finite row $i: $n vs $r")
@@ -176,7 +153,7 @@ class SketchSpec extends AnyFunSuite {
     val cents = Array.tabulate(5)(i => (i, Array.fill(4)(rnd.nextDouble())))
     val ivf = vecs.toDF("e").select(
       Similarity.ivfProbeCellsCol(col("e"), cents, 3).as("native"),
-      Similarity.ivfProbeCellsColRef(col("e"), cents, 3).as("ref"))
+      ReferenceColumns.ivfProbeCellsColRef(col("e"), cents, 3).as("ref"))
       .as[(Seq[Int], Seq[Int])].collect()
     ivf.zipWithIndex.foreach { case ((n, r), i) =>
       assert(n == r, s"ivf cells diverge on non-finite row $i: $n vs $r")
@@ -185,8 +162,8 @@ class SketchSpec extends AnyFunSuite {
 
   test("sketch expressions stay inside whole-stage codegen over a real scan") {
     val plan = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(Dedup.simhashCol(Dedup.tokensCol(col("text"))).as("sh"),
-        Dedup.minhashSignature(Dedup.tokensCol(col("text")), 8).as("mh"))
+      .select(Dedup.simhashPolyCol(Dedup.tokensCol(col("text"))).as("sh"),
+        Dedup.minhashPolyBuckets(Dedup.tokensCol(col("text")), 4, 2).as("mh"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project"), plan.take(600))
   }

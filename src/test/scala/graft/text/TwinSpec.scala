@@ -143,8 +143,8 @@ class TwinSpec extends AnyFunSuite {
     assert(err.getMessage.contains("LITERAL"), s"unhelpful error: ${err.getMessage}")
     // and wrong arity names the function, not an index
     val err2 = intercept[Exception](
-      spark.sql("SELECT minhash_signature(array('a'))").collect())
-    assert(err2.getMessage.contains("minhash_signature takes 2"), s"got: ${err2.getMessage}")
+      spark.sql("SELECT minhash_poly_buckets(array('a'), 4)").collect())
+    assert(err2.getMessage.contains("minhash_poly_buckets takes 3"), s"got: ${err2.getMessage}")
   }
 
   test("normalization idempotence: enhanced always; basic modulo its double-space quirk") {

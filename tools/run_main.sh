@@ -1,7 +1,7 @@
 #!/bin/bash
 # Dev helper: run a graft main on the compiled classpath without sbt
 # (avoids the sbt project lock so tests and mains can overlap).
-# Usage: tools/run_main.sh graft.BenchExtra arg1 arg2 ...
+# Usage: tools/run_main.sh graft.cli.PlanAudit <sfDir> <query> [query...]
 set -euo pipefail
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""
