@@ -176,7 +176,7 @@ object SparkEntry {
     */
   private def salted[I](ds: org.apache.spark.sql.Dataset[I]): org.apache.spark.sql.Dataset[I] = {
     val parts = ds.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    ds.repartition(parts, ExtractionJob.pidCol(ExtractionJob.Config(numPartitions = parts)))
+    ExtractionJob.byKey(ds, ExtractionJob.Config(numPartitions = parts))
   }
 
   /** Shared skeleton of the per-image OCR driver queries: salted

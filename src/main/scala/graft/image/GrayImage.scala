@@ -55,10 +55,14 @@ object GrayImage {
 
 /** Binarized raster: true = ink. Output of Otsu thresholding.
   *
-  * Bit-packed (64 pixels per long, row-major words): page-scale OCR is
-  * memory-bandwidth-bound at high task parallelism, and the binary
-  * raster is copied once per deskew, so 8x fewer bytes than a
-  * Boolean[] directly lifts the N->4N scaling ceiling.
+  * Bit-packed, 64 pixels per long in row-major words (bit x & 63 of
+  * word x >>> 6; bits past `width` stay clear). The OCR kernels work on
+  * whole words so their cost follows the ink, not the page area: Otsu
+  * stores each word once, deskew scoring popcounts masked column runs,
+  * and unshear and segmentation visit only the set bits
+  * (`foreachInkInRow`). The raster is 8x smaller than a Boolean[], which
+  * matters at high task parallelism, where page OCR is
+  * memory-bandwidth-bound.
   */
 final class BinaryImage(val width: Int, val height: Int, val words: Array[Long]) {
   val wordsPerRow: Int = (width + 63) >>> 6

@@ -41,40 +41,81 @@ object Deskew {
     * the FULL ranked list regardless, so exactness never depends on
     * the pruning (15 ink passes instead of 25).
     */
-  def rankedAngles(bin: BinaryImage): IndexedSeq[Int] = {
-    if (bin.inkCount == 0) return IndexedSeq(0)
-    val maxAbsShift = math.abs(shift(3000, bin.width - 1)) + 1
-    val rows = new Array[Int](bin.height + 2 * maxAbsShift)
-    val shiftX = new Array[Int](bin.width) // reused across angles
-    val wpr = bin.wordsPerRow
+  def rankedAngles(bin: BinaryImage): IndexedSeq[Int] =
+    if (bin.inkCount == 0) IndexedSeq(0) else rank(new Scorer(bin))
 
-    // NOTE: the score must NOT sample source rows (tried and
-    // reverted): unshearing mixes row parities at nonzero angles but
-    // not at zero, so sampling halves angle-0's occupied count while
-    // leaving the true angle's intact — systematically misranking
-    // toward zero skew.
-    def score(a: Int): (Int, Int, Long) = {
+  /** The coarse-to-fine search over a scoring function
+    * angle -> (occupied rows, peakiness).
+    */
+  private[ocr] def rank(score: Int => (Int, Long)): IndexedSeq[Int] = {
+    def scored(a: Int): (Int, Int, Long) = { val (occ, peak) = score(a); (a, occ, peak) }
+    def order(s: IndexedSeq[(Int, Int, Long)]) = s.sortBy { case (a, occ, peak) => (occ, -peak, math.abs(a), a) }
+    val coarse = AngleGridMdeg.filter(_ % 500 == 0).map(scored)
+    // refine around the top 2 coarse angles (covers a true angle that
+    // sits between two coarse cells whose scores straddle it)
+    val refineSet = order(coarse).take(2).flatMap { case (a, _, _) => Seq(a - 250, a + 250) }
+      .filter(a => a >= -3000 && a <= 3000).distinct
+    val rankedScored = order(coarse ++ refineSet.map(scored))
+    // unscored fine angles follow as the exactness tail (|angle| order)
+    val seen = rankedScored.map(_._1).toSet
+    rankedScored.map(_._1) ++ AngleGridMdeg.filterNot(seen)
+  }
+
+  /** Row histogram of the unsheared ink, scored per angle. Buffers are
+    * reused across the angles of one image.
+    *
+    * NOTE: the score must NOT sample source rows (tried and reverted):
+    * unshearing mixes row parities at nonzero angles but not at zero,
+    * so sampling halves angle-0's occupied count while leaving the
+    * true angle's intact — systematically misranking toward zero skew.
+    */
+  private[ocr] final class Scorer(bin: BinaryImage) extends (Int => (Int, Long)) {
+    private val wpr = bin.wordsPerRow
+    private val maxAbsShift = math.abs(shift(3000, bin.width - 1)) + 1
+    private val rows = new Array[Int](bin.height + 2 * maxAbsShift)
+    private val inkRows: Array[Int] = (0 until bin.height).filter(bin.rowHasInk).toArray
+    // one segment per (run of equal column shift) x (word it touches):
+    // at most one run per column plus one split per word boundary
+    private val segWord = new Array[Int](bin.width + wpr)
+    private val segMask = new Array[Long](bin.width + wpr)
+    private val segShift = new Array[Int](bin.width + wpr)
+
+    /** Unshearing moves whole runs of columns that share one shift, so
+      * each (row, run) pair adds a masked popcount to one histogram
+      * row; the work is rows-with-ink x runs, not ink pixels.
+      */
+    def apply(a: Int): (Int, Long) = {
       java.util.Arrays.fill(rows, 0)
-      // per-column shift lookup: one tan() per angle, not per pixel
+      // one tan() per angle, not per column
       val tanA = Math.tan(a / 1000.0 * Math.PI / 180.0)
-      var x = 0
-      while (x < bin.width) { shiftX(x) = Math.round(tanA * x).toInt; x += 1 }
-      // iterate the packed raster directly: ~width*height/8 bytes per
-      // angle instead of re-reading a per-pixel coordinate list
-      var y = 0
-      while (y < bin.height) {
-        val base = y + maxAbsShift
-        var wi = 0
-        while (wi < wpr) {
-          var w = bin.words(y * wpr + wi)
-          val xBase = wi << 6
-          while (w != 0L) {
-            rows(base - shiftX(xBase + java.lang.Long.numberOfTrailingZeros(w))) += 1
-            w &= w - 1
-          }
-          wi += 1
+      var nSeg = 0
+      var x0 = 0
+      while (x0 < bin.width) {
+        val s = Math.round(tanA * x0).toInt
+        var x1 = x0
+        while (x1 + 1 < bin.width && Math.round(tanA * (x1 + 1)).toInt == s) x1 += 1
+        var x = x0
+        while (x <= x1) {
+          val hi = math.min(x1, x | 63)
+          segWord(nSeg) = x >>> 6
+          segMask(nSeg) = (-1L >>> (63 - (hi & 63))) & (-1L << (x & 63))
+          segShift(nSeg) = s
+          nSeg += 1
+          x = hi + 1
         }
-        y += 1
+        x0 = x1 + 1
+      }
+      var i = 0
+      while (i < inkRows.length) {
+        val y = inkRows(i)
+        val base = y + maxAbsShift
+        val rowOff = y * wpr
+        var k = 0
+        while (k < nSeg) {
+          rows(base - segShift(k)) += java.lang.Long.bitCount(bin.words(rowOff + segWord(k)) & segMask(k))
+          k += 1
+        }
+        i += 1
       }
       var occupied = 0
       var peak = 0L
@@ -85,20 +126,8 @@ object Deskew {
         peak += c * c
         r += 1
       }
-      (a, occupied, peak)
+      (occupied, peak)
     }
-
-    val coarse = AngleGridMdeg.filter(_ % 500 == 0).map(score)
-    val bestCoarse = coarse.sortBy { case (a, occ, peak) => (occ, -peak, math.abs(a), a) }
-    // refine around the top 2 coarse angles (covers a true angle that
-    // sits between two coarse cells whose scores straddle it)
-    val refineSet = bestCoarse.take(2).flatMap { case (a, _, _) => Seq(a - 250, a + 250) }
-      .filter(a => a >= -3000 && a <= 3000).distinct
-    val scored = coarse ++ refineSet.map(score)
-    val rankedScored = scored.sortBy { case (a, occ, peak) => (occ, -peak, math.abs(a), a) }
-    // unscored fine angles follow as the exactness tail (|angle| order)
-    val seen = rankedScored.map(_._1).toSet
-    rankedScored.map(_._1) ++ AngleGridMdeg.filterNot(seen)
   }
 
   /** Best single angle (convenience; the engine uses rankedAngles). */

@@ -46,7 +46,10 @@ object Otsu {
   @annotation.tailrec
   private def gcd(a: Int, b: Int): Int = if (b == 0) a else gcd(b, a % b)
 
-  def binarize(img: GrayImage): BinaryImage = {
+  def binarize(img: GrayImage): BinaryImage = pack(img, sampledThreshold(img))
+
+  /** Otsu threshold of an image, from a sampled histogram. */
+  private[ocr] def sampledThreshold(img: GrayImage): Int = {
     // stride COPRIME with the row width: an aligned stride samples a
     // fixed column-residue class, which on grid-regular glyph layouts
     // can systematically miss the ink class; a coprime stride sweeps
@@ -66,17 +69,32 @@ object Otsu {
       while (v < 256) { if (hist(v) > 0) { if (v < lo) lo = v; if (v > hi) hi = v }; v += 1 }
       if (hi - lo < 100) hist = img.histogram
     }
-    val t = threshold(hist)
+    threshold(hist)
+  }
+
+  /** Pack every pixel <= t as ink. Each 64-pixel word is built in a
+    * register, highest pixel first, and stored once; the ink bit is the
+    * sign bit of `v - (t + 1)`, so the loop has no data-dependent branch.
+    */
+  private[ocr] def pack(img: GrayImage, t: Int): BinaryImage = {
     val out = BinaryImage.blank(img.width, img.height)
+    val px = img.pixels
+    val t1 = t + 1
     var y = 0
     while (y < img.height) {
       val rowBase = img.offset + y * img.width
       val wordBase = y * out.wordsPerRow
-      var x = 0
-      while (x < img.width) {
-        if ((img.pixels(rowBase + x) & 0xff) <= t)
-          out.words(wordBase + (x >>> 6)) |= (1L << (x & 63))
-        x += 1
+      var wi = 0
+      while (wi < out.wordsPerRow) {
+        val x0 = rowBase + (wi << 6)
+        var b = math.min(64, img.width - (wi << 6)) - 1
+        var word = 0L
+        while (b >= 0) {
+          word = (word << 1) | (((px(x0 + b) & 0xff) - t1) >>> 31)
+          b -= 1
+        }
+        out.words(wordBase + wi) = word
+        wi += 1
       }
       y += 1
     }

@@ -65,19 +65,14 @@ object Segmentation {
     * are ignored; the engine's structural validation rejects such
     * candidates anyway).
     */
-  private def columnMasks(bin: BinaryImage, band: LineBand): Array[Long] = {
+  private[ocr] def columnMasks(bin: BinaryImage, band: LineBand): Array[Long] = {
     val masks = new Array[Long](bin.width)
-    var x = 0
-    while (x < bin.width) {
-      var m = 0L
-      var r = 0
-      val h = math.min(band.height, 64)
-      while (r < h) {
-        if (bin(x, band.top + r)) m |= (1L << r)
-        r += 1
-      }
-      masks(x) = m
-      x += 1
+    val h = math.min(band.height, 64)
+    var r = 0
+    while (r < h) {
+      val bit = 1L << r
+      bin.foreachInkInRow(band.top + r) { x => masks(x) |= bit }
+      r += 1
     }
     masks
   }
@@ -155,22 +150,24 @@ object Segmentation {
     SegLine(words.toIndexedSeq, band, baseline)
   }
 
+  /** Column mask (low GlyphH bits, bit r = row r) -> the same rows
+    * at packed positions r*GlyphW, for column 0.
+    */
+  private val ColumnSpread: Array[Long] = Array.tabulate(1 << GlyphH) { m =>
+    (0 until GlyphH).foldLeft(0L)((acc, r) => if ((m >>> r & 1) != 0) acc | (1L << (r * GlyphW)) else acc)
+  }
+
   /** Extract a glyph's cells from columns [left..right] (inclusive)
     * into the packed 60-bit representation the classifier consumes
     * (bit r*GlyphW+c). Off-nominal widths are left-aligned.
     */
-  private def extractGlyph(masks: Array[Long], left: Int, right: Int, bandH: Int): GlyphCells = {
-    var packed = 0L
+  private[ocr] def extractGlyph(masks: Array[Long], left: Int, right: Int, bandH: Int): GlyphCells = {
+    val rowMask = (1 << math.min(bandH, GlyphH)) - 1
     val w = right - left + 1
+    var packed = 0L
     var c = 0
     while (c < math.min(w, GlyphW)) {
-      val m = masks(left + c)
-      var r = 0
-      val h = math.min(bandH, GlyphH)
-      while (r < h) {
-        if ((m & (1L << r)) != 0L) packed |= (1L << (r * GlyphW + c))
-        r += 1
-      }
+      packed |= ColumnSpread(masks(left + c).toInt & rowMask) << c
       c += 1
     }
     GlyphCells(packed, w)

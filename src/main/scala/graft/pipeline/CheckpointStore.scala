@@ -44,14 +44,15 @@ final class CheckpointStore(dir: String) extends Serializable {
 
   /** Persist the partitioning fingerprint of a run; error on mismatch
     * with a previous run of the same runId (a resume with different
-    * numPartitions/salt would silently drop every doc whose NEW pid
-    * happens to collide with an already-completed pid).
+    * numPartitions/salt/pid function would silently drop every doc
+    * whose NEW pid happens to collide with an already-completed pid).
+    * `pidFunction` must not contain a double quote.
     */
-  def verifyOrWriteConfig(runId: String, numPartitions: Int, salt: Long): Unit = {
+  def verifyOrWriteConfig(runId: String, numPartitions: Int, salt: Long, pidFunction: String): Unit = {
     val d = runDir(runId)
     Files.createDirectories(d)
     val f = d.resolve("config.json")
-    val json = s"""{"num_partitions":$numPartitions,"salt":$salt}"""
+    val json = s"""{"num_partitions":$numPartitions,"salt":$salt,"pid_function":"$pidFunction"}"""
     if (Files.exists(f)) {
       val prev = new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
       require(prev == json,

@@ -15,7 +15,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * lifecycle replacing the reference's sequential per-file loop
   * (process_all_pdfs, scripts/all-pdf-to-json-smart.py:222-302):
   *
-  *   read -> salted repartition on xxhash64(doc_id) -> checkpoint
+  *   read -> salted repartition on xxhash64(doc_id, salt) -> checkpoint
   *   anti-join (resume) -> mapPartitions(OcrStage) -> sink + lineage
   *
   * Scale notes (designed for 10^12 docs / 1000 executors, tested on
@@ -25,6 +25,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *   - the repartition key is salted (xxhash64(doc_id, salt)) so
   *     adversarial doc_id distributions and image-heavy documents
   *     spread across partitions; AQE handles residual skew;
+  *   - the logical partition id is the Spark partition the row lands
+  *     in: pmod(hash(key), numPartitions), the id HashPartitioning
+  *     computes for `repartition(numPartitions, key)`;
   *   - model weights are broadcast once per executor;
   *   - media bytes are fetched inside the task (never shuffled);
   *   - resume is a broadcast anti-join against the tiny completed-
@@ -42,12 +45,26 @@ object ExtractionJob {
       mediaStore: MediaStore = SynthMediaStore
   )
 
-  /** Logical partition id: pmod(xxhash64(doc_id, salt), numPartitions)
-    * — ONE definition shared by extract and the resumable path (the
-    * resume anti-join is only sound if both sides agree on it).
+  /** Salted partitioning key: xxhash64(doc_id, salt). */
+  def keyCol(cfg: Config): org.apache.spark.sql.Column = xxhash64(col("doc_id"), lit(cfg.salt))
+
+  /** Logical partition id: pmod(hash(keyCol), numPartitions), which is
+    * how HashPartitioning places a row when repartitioning on keyCol,
+    * so it equals spark_partition_id() after `byKey`. ONE definition
+    * shared by extract and the resumable path (the resume anti-join is
+    * only sound if both sides agree on it). Repartitioning on the pid
+    * itself would hash it a second time and leave partitions empty.
     */
   def pidCol(cfg: Config): org.apache.spark.sql.Column =
-    pmod(xxhash64(col("doc_id"), lit(cfg.salt)), lit(cfg.numPartitions)).cast("int")
+    pmod(hash(keyCol(cfg)), lit(cfg.numPartitions))
+
+  /** Tag of the pid function, kept in the resume fingerprint so a
+    * checkpoint written under another pid function is refused.
+    */
+  val PidFunction = "pmod(hash(xxhash64(doc_id,salt)),n)"
+
+  /** The one salted repartition: row -> Spark partition pidCol(cfg). */
+  def byKey[T](ds: Dataset[T], cfg: Config): Dataset[T] = ds.repartition(cfg.numPartitions, keyCol(cfg))
 
   /** Pure transformation: extraction as a Dataset op (used by queries
     * and the bench; no checkpointing).
@@ -55,10 +72,7 @@ object ExtractionJob {
   def extract(spark: SparkSession, docs: Dataset[Doc], cfg: Config = Config()): Dataset[ExtractedDoc] = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(GlyphClassifier.defaultWeights)
-    docs
-      .repartition(cfg.numPartitions, pidCol(cfg))
-      .as[Doc]
-      .mapPartitions(new OcrStage(bc, cfg.mediaStore))
+    byKey(docs, cfg).mapPartitions(new OcrStage(bc, cfg.mediaStore))
   }
 
   /** S9 (SURVEY.md §2.1): job-level metrics via Dataset.observe — the
@@ -93,9 +107,9 @@ object ExtractionJob {
 
   /** Resumable run: partition-granular checkpointing with durable
     * per-partition data commits. Logical partition id =
-    * pmod(xxhash64(doc_id, salt), numPartitions) — a pure function of
-    * the row, so it is stable across runs and co-located by the
-    * repartition (same value -> same task).
+    * pmod(hash(xxhash64(doc_id, salt)), numPartitions) — a pure
+    * function of the row, so it is stable across runs, and it is the
+    * task the repartition sends the row to (one pid per task).
     */
   def runResumable(spark: SparkSession, docs: Dataset[Doc], outDir: String,
                    cfg: Config = Config()): RunSummary = {
@@ -103,7 +117,7 @@ object ExtractionJob {
     val store = new CheckpointStore(s"$outDir/checkpoint")
     // refuse to resume under a different partitioning: completed pids
     // only mean "these docs are durable" under the SAME pid function
-    store.verifyOrWriteConfig(cfg.runId, cfg.numPartitions, cfg.salt)
+    store.verifyOrWriteConfig(cfg.runId, cfg.numPartitions, cfg.salt, PidFunction)
     val completed = store.completedPids(cfg.runId)
     // data nested per run_id, mirroring the checkpoint layout: two runs
     // sharing an outDir keep separate data AND separate marks (a flat
@@ -113,9 +127,7 @@ object ExtractionJob {
 
     val withPid = docs.withColumn("pid", pidCol(cfg))
     val completedDf = completed.toSeq.toDF("pid")
-    val pending = withPid
-      .join(broadcast(completedDf), Seq("pid"), "left_anti")
-      .repartition(cfg.numPartitions, col("pid"))
+    val pending = byKey(withPid.join(broadcast(completedDf), Seq("pid"), "left_anti"), cfg)
       .select(col("pid"), col("doc_id"), col("spans"))
       .as[(Int, String, Seq[Span])]
 

@@ -50,7 +50,7 @@ class SparkEntrySpec extends AnyFunSuite {
     // hash exchange has to appear below the decode map
     Seq("mm_resize", "mm_frame_sample", "mm_media_meta", "ocr_lines").foreach { q =>
       val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
-      assert(plan.contains("pmod(xxhash64"),
+      assert(plan.contains("hashpartitioning(xxhash64("),
         s"$q missing the salted repartition:\n${plan.take(800)}")
     }
   }

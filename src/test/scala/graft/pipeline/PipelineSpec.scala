@@ -183,10 +183,36 @@ class PipelineSpec extends AnyFunSuite {
     // same config still resumes fine
     assert(ExtractionJob.runResumable(spark, docs, dir,
       ExtractionJob.Config(numPartitions = 8, runId = "cfg1")).skippedPartitions > 0)
+    // a checkpoint fingerprinted without the pid function was written
+    // under another pid function: refused, not silently resumed
+    val legacyDir = Files.createTempDirectory("graft-cfg-legacy").toString
+    val legacyRun = Paths.get(legacyDir, "checkpoint", "run_id=cfg2")
+    Files.createDirectories(legacyRun)
+    Files.write(legacyRun.resolve("config.json"), """{"num_partitions":8,"salt":42}""".getBytes("UTF-8"))
+    val e3 = intercept[IllegalArgumentException] {
+      ExtractionJob.runResumable(spark, docs, legacyDir, ExtractionJob.Config(numPartitions = 8, runId = "cfg2"))
+    }
+    assert(e3.getMessage.contains("resume config mismatch"))
     // hostile run ids are rejected before touching the filesystem
     intercept[IllegalArgumentException] {
       ExtractionJob.runResumable(spark, docs, dir,
         ExtractionJob.Config(numPartitions = 8, runId = "../escape"))
+    }
+  }
+
+  test("pid is the Spark partition the row lands in, and no partition is empty") {
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
+    val docs = DocGen.synthetic(spark, nDocs = 300, seed = 5L)
+    for (n <- Seq(4, 8, 16)) {
+      val cfg = ExtractionJob.Config(numPartitions = n)
+      val placed = ExtractionJob.byKey(docs.withColumn("pid", ExtractionJob.pidCol(cfg)), cfg)
+        .select(col("pid"), spark_partition_id().as("spid"))
+        .collect().map(r => (r.getInt(0), r.getInt(1)))
+      assert(placed.length == 300)
+      val misplaced = placed.count { case (pid, spid) => pid != spid }
+      assert(misplaced == 0, s"n=$n: $misplaced rows sit in another partition than their pid")
+      val filled = placed.map(_._2).distinct.length
+      assert(filled == n, s"n=$n: only $filled of $n partitions get rows")
     }
   }
 
