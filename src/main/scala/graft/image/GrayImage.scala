@@ -59,8 +59,8 @@ object GrayImage {
   * word x >>> 6; bits past `width` stay clear). The OCR kernels work on
   * whole words so their cost follows the ink, not the page area: Otsu
   * stores each word once, deskew scoring popcounts masked column runs,
-  * and unshear and segmentation visit only the set bits
-  * (`foreachInkInRow`). The raster is 8x smaller than a Boolean[], which
+  * unshear moves each run as one masked word, and segmentation visits
+  * only the set bits. The raster is 8x smaller than a Boolean[], which
   * matters at high task parallelism, where page OCR is
   * memory-bandwidth-bound.
   */
@@ -84,21 +84,6 @@ final class BinaryImage(val width: Int, val height: Int, val words: Array[Long])
     val end = i + wordsPerRow
     while (i < end) { if (words(i) != 0L) return true; i += 1 }
     false
-  }
-  /** visit every ink pixel of row y (ascending x) */
-  @inline def foreachInkInRow(y: Int)(f: Int => Unit): Unit = {
-    var wi = 0
-    while (wi < wordsPerRow) {
-      var w = words(y * wordsPerRow + wi)
-      val base = wi << 6
-      while (w != 0L) {
-        val tz = java.lang.Long.numberOfTrailingZeros(w)
-        val x = base + tz
-        if (x < width) f(x)
-        w &= w - 1
-      }
-      wi += 1
-    }
   }
 }
 

@@ -14,10 +14,13 @@ import java.util.zip.{Adler32, CRC32, Inflater}
   * dependency. CRC32/Adler32 come from java.util.zip (JDK, not a
   * library dependency).
   *
-  * Decoder: parses IHDR, concatenates IDAT, inflates (JDK Inflater, so
-  * real compressed PNGs decode too, not just our stored-block ones)
-  * and reverses ALL FIVE standard row filters (None/Sub/Up/Average/
-  * Paeth) — grayscale-8 only, the one format the pipeline produces.
+  * Decoder: parses IHDR, allocates one (w+1)*h buffer and inflates
+  * each IDAT chunk straight into it (JDK Inflater, so real compressed
+  * PNGs decode too, not just our stored-block ones), then reverses ALL
+  * FIVE standard row filters (None/Sub/Up/Average/Paeth) in place, so
+  * the returned GrayImage is a view over that same buffer. Grayscale-8
+  * only, the one format the pipeline produces. Malformed input fails
+  * with IllegalArgumentException.
   */
 object PngCodec {
 
@@ -96,81 +99,111 @@ object PngCodec {
   private def readIntBE(a: Array[Byte], at: Int): Int =
     ((a(at) & 0xff) << 24) | ((a(at + 1) & 0xff) << 16) | ((a(at + 2) & 0xff) << 8) | (a(at + 3) & 0xff)
 
+  // chunk types as big-endian ints
+  private final val IHDR = 0x49484452
+  private final val IDAT = 0x49444154
+  private final val IEND = 0x49454e44
+
   def decode(bytes: Array[Byte]): GrayImage = {
     require(isPng(bytes), "not a PNG (bad signature)")
     var i = 8
     var w = 0; var h = 0
-    val idat = new java.io.ByteArrayOutputStream(bytes.length)
-    var sawIhdr = false
-    var done = false
-    while (!done && i + 8 <= bytes.length) {
-      val len = readIntBE(bytes, i)
-      val typ = new String(bytes, i + 4, 4, "US-ASCII")
-      require(len >= 0 && i + 12 + len <= bytes.length, s"truncated chunk $typ")
-      typ match {
-        case "IHDR" =>
-          require(len == 13, "bad IHDR length")
-          w = readIntBE(bytes, i + 8); h = readIntBE(bytes, i + 12)
-          val depth = bytes(i + 16); val color = bytes(i + 17)
-          val interlace = bytes(i + 20)
-          require(depth == 8 && color == 0, s"unsupported PNG: depth=$depth color=$color")
-          require(interlace == 0, "interlaced PNG unsupported")
-          sawIhdr = true
-        case "IDAT" => idat.write(bytes, i + 8, len)
-        case "IEND" => done = true
-        case _ => // ancillary chunk: skip
-      }
-      i += 12 + len
-    }
-    require(sawIhdr, "missing IHDR")
-    // hostile-header guard BEFORE allocation: 65535x65535 would
-    // overflow (w+1)*h to a negative array size
-    require(w > 0 && h > 0 && (w + 1L) * h <= Int.MaxValue, s"bad PNG dimensions: $w x $h")
-
-    // inflate the zlib stream into filtered scanlines
-    val raw = new Array[Byte]((w + 1) * h)
-    val inf = new Inflater()
-    inf.setInput(idat.toByteArray)
+    var raw: Array[Byte] = null // (w + 1) * h: filtered scanlines, then the raster
     var got = 0
-    while (got < raw.length && !inf.finished()) {
-      val n = inf.inflate(raw, got, raw.length - got)
-      // ALL input was provided up front, so zero progress means a
-      // truncated or unsupported stream (e.g. FDICT preset dictionary:
-      // inflate() returns 0 with needsDictionary() set, and a naive
-      // needsInput() check would spin forever on it)
-      require(n > 0, "truncated or unsupported IDAT stream")
-      got += n
-    }
-    inf.end()
+    val inf = new Inflater()
+    try {
+      var done = false
+      while (!done && i + 8 <= bytes.length) {
+        val len = readIntBE(bytes, i)
+        val typ = readIntBE(bytes, i + 4)
+        // Long: a length near Int.MaxValue must not wrap past the check
+        require(len >= 0 && i + 12L + len <= bytes.length, s"truncated chunk at byte $i")
+        typ match {
+          case IHDR =>
+            require(raw == null, "duplicate IHDR")
+            require(len == 13, "bad IHDR length")
+            w = readIntBE(bytes, i + 8); h = readIntBE(bytes, i + 12)
+            val depth = bytes(i + 16); val color = bytes(i + 17)
+            val interlace = bytes(i + 20)
+            require(depth == 8 && color == 0, s"unsupported PNG: depth=$depth color=$color")
+            require(interlace == 0, "interlaced PNG unsupported")
+            // hostile-header guard BEFORE allocation: 65535x65535 would
+            // overflow (w+1)*h to a negative array size
+            require(w > 0 && h > 0 && (w + 1L) * h <= Int.MaxValue, s"bad PNG dimensions: $w x $h")
+            // a corrupted but in-range size would still be allocated in
+            // full before the stream is found short
+            val crc = new CRC32(); crc.update(bytes, i + 4, 4 + len)
+            require(crc.getValue.toInt == readIntBE(bytes, i + 8 + len), "IHDR CRC mismatch")
+            raw = new Array[Byte]((w + 1) * h)
+          case IDAT =>
+            require(raw != null, "IDAT before IHDR")
+            // inflate each chunk straight into the scanline buffer
+            if (len > 0 && got < raw.length && !inf.finished()) {
+              inf.setInput(bytes, i + 8, len)
+              while (got < raw.length && !inf.finished() && !inf.needsInput()) {
+                val n = inf.inflate(raw, got, raw.length - got)
+                // zero progress with input left: a preset dictionary
+                // (FDICT) or a stream that cannot go on
+                require(n > 0 || inf.needsInput() || inf.finished(), "truncated or unsupported IDAT stream")
+                got += n
+              }
+            }
+          case IEND => done = true
+          case _ => // ancillary chunk: skip
+        }
+        i += 12 + len
+      }
+    } catch {
+      case e: java.util.zip.DataFormatException =>
+        throw new IllegalArgumentException(s"corrupt IDAT stream: ${e.getMessage}", e)
+    } finally inf.end()
+    require(raw != null, "missing IHDR")
     require(got == raw.length, s"short PNG raster: $got of ${raw.length}")
+    unfilter(raw, w, h)
+    new GrayImage(w, h, raw)
+  }
 
-    // reverse row filters in place into the output raster
-    val px = new Array[Byte](w * h)
+  /** Reverse the row filters in place. Row y's scanline starts at
+    * y*(w+1)+1 and its pixels go to y*w, y+1 bytes to the left, so every
+    * write lands behind every byte not yet read; the rows above are
+    * already final when row y reads them.
+    */
+  private def unfilter(raw: Array[Byte], w: Int, h: Int): Unit = {
     var y = 0
     while (y < h) {
       val f = raw(y * (w + 1)) & 0xff
-      val rowIn = y * (w + 1) + 1
-      val rowOut = y * w
-      var x = 0
-      while (x < w) {
-        val cur = raw(rowIn + x) & 0xff
-        val left = if (x > 0) px(rowOut + x - 1) & 0xff else 0
-        val up = if (y > 0) px(rowOut - w + x) & 0xff else 0
-        val ul = if (x > 0 && y > 0) px(rowOut - w + x - 1) & 0xff else 0
-        val v = f match {
-          case 0 => cur
-          case 1 => cur + left
-          case 2 => cur + up
-          case 3 => cur + ((left + up) >> 1)
-          case 4 => cur + paeth(left, up, ul)
-          case _ => throw new IllegalArgumentException(s"bad PNG filter $f on row $y")
-        }
-        px(rowOut + x) = v.toByte
-        x += 1
+      val in = y * (w + 1) + 1
+      val out = y * w
+      val up = out - w // the row above in the output; read only when y > 0
+      // on the first row the row above reads as 0: Up is None, Paeth is Sub
+      val g = if (y > 0) f else f match { case 2 => 0; case 4 => 1; case o => o }
+      g match {
+        case 0 => System.arraycopy(raw, in, raw, out, w)
+        case 1 =>
+          var left = 0; var x = 0
+          while (x < w) { left = (raw(in + x) + left) & 0xff; raw(out + x) = left.toByte; x += 1 }
+        case 2 =>
+          var x = 0
+          while (x < w) { raw(out + x) = (raw(in + x) + raw(up + x)).toByte; x += 1 }
+        case 3 =>
+          var left = 0; var x = 0
+          while (x < w) {
+            val u = if (y > 0) raw(up + x) & 0xff else 0
+            left = (raw(in + x) + ((left + u) >> 1)) & 0xff
+            raw(out + x) = left.toByte; x += 1
+          }
+        case 4 =>
+          var left = 0; var ul = 0; var x = 0
+          while (x < w) {
+            val u = raw(up + x) & 0xff
+            left = (raw(in + x) + paeth(left, u, ul)) & 0xff
+            raw(out + x) = left.toByte
+            ul = u; x += 1
+          }
+        case _ => throw new IllegalArgumentException(s"bad PNG filter $f on row $y")
       }
       y += 1
     }
-    new GrayImage(w, h, px)
   }
 
   @inline private def paeth(a: Int, b: Int, c: Int): Int = {

@@ -224,7 +224,7 @@ object SynthFont {
   }
 
   /** Classifier feature vectors == the bitmaps (the "model weights"
-    * broadcast to executors; see graft.ocr.GlyphClassifier).
+    * compiled into every executor; see graft.ocr.GlyphClassifier).
     */
   def centroids: Array[Array[Boolean]] = Bitmaps.toArray
 

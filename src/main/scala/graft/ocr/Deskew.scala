@@ -61,6 +61,59 @@ object Deskew {
     rankedScored.map(_._1) ++ AngleGridMdeg.filterNot(seen)
   }
 
+  /** shiftY(a, x) for x in [0, width) — possibly longer. Tables of the
+    * grid angles are computed once per JVM and regrown for a wider
+    * page; a race between two tasks only computes the same table twice.
+    */
+  private val gridShifts = new java.util.concurrent.atomic.AtomicReferenceArray[Array[Int]](AngleGridMdeg.size)
+
+  private[ocr] def shifts(a: Int, width: Int): Array[Int] = {
+    def table(n: Int) = Array.tabulate(n)(shift(a, _))
+    val g = (a + 3000) / 250 // grid index, ascending angle
+    if (a % 250 != 0 || g < 0 || g >= gridShifts.length) table(width)
+    else {
+      val cached = gridShifts.get(g)
+      if (cached != null && cached.length >= width) cached
+      else {
+        val grown = table(math.max(width, if (cached == null) 0 else 2 * cached.length))
+        gridShifts.set(g, grown)
+        grown
+      }
+    }
+  }
+
+  /** The columns of a packed raster split into runs of equal shift, cut
+    * at word boundaries: segment k covers the bits `mask(k)` of word
+    * `word(k)` of each row, all shifted by `shift(k)`. At most one run
+    * per column plus one split per word boundary.
+    */
+  private final class ShiftRuns(width: Int) {
+    val word = new Array[Int](width + ((width + 63) >>> 6))
+    val mask = new Array[Long](word.length)
+    val shift = new Array[Int](word.length)
+    var n = 0
+
+    def build(shifts: Array[Int]): Unit = {
+      n = 0
+      var x0 = 0
+      while (x0 < width) {
+        val s = shifts(x0)
+        var x1 = x0
+        while (x1 + 1 < width && shifts(x1 + 1) == s) x1 += 1
+        var x = x0
+        while (x <= x1) {
+          val hi = math.min(x1, x | 63)
+          word(n) = x >>> 6
+          mask(n) = (-1L >>> (63 - (hi & 63))) & (-1L << (x & 63))
+          shift(n) = s
+          n += 1
+          x = hi + 1
+        }
+        x0 = x1 + 1
+      }
+    }
+  }
+
   /** Row histogram of the unsheared ink, scored per angle. Buffers are
     * reused across the angles of one image.
     *
@@ -74,11 +127,7 @@ object Deskew {
     private val maxAbsShift = math.abs(shift(3000, bin.width - 1)) + 1
     private val rows = new Array[Int](bin.height + 2 * maxAbsShift)
     private val inkRows: Array[Int] = (0 until bin.height).filter(bin.rowHasInk).toArray
-    // one segment per (run of equal column shift) x (word it touches):
-    // at most one run per column plus one split per word boundary
-    private val segWord = new Array[Int](bin.width + wpr)
-    private val segMask = new Array[Long](bin.width + wpr)
-    private val segShift = new Array[Int](bin.width + wpr)
+    private val runs = new ShiftRuns(bin.width)
 
     /** Unshearing moves whole runs of columns that share one shift, so
       * each (row, run) pair adds a masked popcount to one histogram
@@ -86,33 +135,15 @@ object Deskew {
       */
     def apply(a: Int): (Int, Long) = {
       java.util.Arrays.fill(rows, 0)
-      // one tan() per angle, not per column
-      val tanA = Math.tan(a / 1000.0 * Math.PI / 180.0)
-      var nSeg = 0
-      var x0 = 0
-      while (x0 < bin.width) {
-        val s = Math.round(tanA * x0).toInt
-        var x1 = x0
-        while (x1 + 1 < bin.width && Math.round(tanA * (x1 + 1)).toInt == s) x1 += 1
-        var x = x0
-        while (x <= x1) {
-          val hi = math.min(x1, x | 63)
-          segWord(nSeg) = x >>> 6
-          segMask(nSeg) = (-1L >>> (63 - (hi & 63))) & (-1L << (x & 63))
-          segShift(nSeg) = s
-          nSeg += 1
-          x = hi + 1
-        }
-        x0 = x1 + 1
-      }
+      runs.build(shifts(a, bin.width))
       var i = 0
       while (i < inkRows.length) {
         val y = inkRows(i)
         val base = y + maxAbsShift
         val rowOff = y * wpr
         var k = 0
-        while (k < nSeg) {
-          rows(base - segShift(k)) += java.lang.Long.bitCount(bin.words(rowOff + segWord(k)) & segMask(k))
+        while (k < runs.n) {
+          rows(base - runs.shift(k)) += java.lang.Long.bitCount(bin.words(rowOff + runs.word(k)) & runs.mask(k))
           k += 1
         }
         i += 1
@@ -133,20 +164,29 @@ object Deskew {
   /** Best single angle (convenience; the engine uses rankedAngles). */
   def detectAngle(bin: BinaryImage): Int = rankedAngles(bin).head
 
-  /** Invert the shear for the given angle. */
+  /** Invert the shear for the given angle: each run of equal shift
+    * moves as one masked word per row.
+    */
   def unshear(bin: BinaryImage, angleMdeg: Int): BinaryImage = {
     if (angleMdeg == 0) return bin
-    val sEdge = shift(angleMdeg, bin.width - 1)
+    val shiftX = shifts(angleMdeg, bin.width)
+    val sEdge = shiftX(bin.width - 1)
     val off = math.max(0, sEdge) // positive angles shifted down; restore up
     val newH = bin.height + math.abs(sEdge)
     val out = BinaryImage.blank(bin.width, newH)
-    val shiftX = Array.tabulate(bin.width)(x => shift(angleMdeg, x))
+    val wpr = bin.wordsPerRow
+    val runs = new ShiftRuns(bin.width)
+    runs.build(shiftX)
     var y = 0
     while (y < bin.height) {
-      val yy = y
-      bin.foreachInkInRow(yy) { x =>
-        val ny = yy - shiftX(x) + off
-        if (ny >= 0 && ny < newH) out.set(x, ny, true)
+      if (bin.rowHasInk(y)) {
+        var k = 0
+        while (k < runs.n) {
+          val bits = bin.words(y * wpr + runs.word(k)) & runs.mask(k)
+          val ny = y - runs.shift(k) + off
+          if (bits != 0L && ny >= 0 && ny < newH) out.words(ny * wpr + runs.word(k)) |= bits
+          k += 1
+        }
       }
       y += 1
     }

@@ -10,8 +10,9 @@ import graft.image.SynthFont.GlyphId
   * the dot product with a template w is area - 2*hamming(x, w), so the
   * argmax-logit class is the nearest-centroid class; we compute it
   * directly with popcount over 60-bit packed glyph vectors. The
-  * "weights" are the packed template array — a plain Array[Long] that
-  * the pipeline broadcasts once per executor (the analogue of the
+  * "weights" are the packed template array — a plain Array[Long]
+  * compiled in from the font. The pipeline shares one immutable
+  * classifier per JVM, `GlyphClassifier.default` (the analogue of the
   * reference's lazily-initialized, reused PaddleOCR model,
   * scripts/all-pdf-to-json-smart.py:151-157).
   *
@@ -62,9 +63,12 @@ object GlyphClassifier {
   }
 
   /** The embedded model weights, derived deterministically from the
-    * synthetic font. Broadcast these, not the classifier.
+    * synthetic font.
     */
   def defaultWeights: Array[Long] = SynthFont.Bitmaps.map(pack).toArray
 
-  def default: GlyphClassifier = new GlyphClassifier(defaultWeights)
+  /** The one classifier per JVM over the embedded weights, built on
+    * first use. It is immutable, so every task and thread shares it.
+    */
+  lazy val default: GlyphClassifier = new GlyphClassifier(defaultWeights)
 }

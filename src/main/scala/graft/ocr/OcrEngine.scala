@@ -20,7 +20,7 @@ import graft.model.OcrLine
   * extract_text_ocr (smart.py:115-117).
   *
   * Pure and Serializable: one instance per executor inside
-  * mapPartitions; the classifier weights arrive via broadcast.
+  * mapPartitions over the JVM's shared `GlyphClassifier.default`.
   */
 final class OcrEngine(classifier: GlyphClassifier) extends Serializable {
 

@@ -72,13 +72,24 @@ object Otsu {
     threshold(hist)
   }
 
-  /** Pack every pixel <= t as ink. Each 64-pixel word is built in a
-    * register, highest pixel first, and stored once; the ink bit is the
-    * sign bit of `v - (t + 1)`, so the loop has no data-dependent branch.
+  private final val Lanes = 0x0101010101010101L
+  private final val High = 0x8080808080808080L
+
+  /** Pack every pixel <= t as ink, 8 pixels per step: one little-endian
+    * long holds pixels x..x+7 in bytes 0..7. Per byte, v <= t is
+    * decided on the high bit, and the low 7 bits are compared by
+    * (t | 0x80) - (v & 0x7f), which never borrows into the next byte;
+    * the 8 answer bits (bit 7 of each byte) are gathered into one byte
+    * by a multiply. The last pixels of a word that do not fill a long
+    * are packed one at a time (the ink bit is the sign bit of
+    * `v - (t + 1)`).
     */
   private[ocr] def pack(img: GrayImage, t: Int): BinaryImage = {
     val out = BinaryImage.blank(img.width, img.height)
     val px = img.pixels
+    val le = java.nio.ByteBuffer.wrap(px).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val tt = t * Lanes
+    val th = tt | High
     val t1 = t + 1
     var y = 0
     while (y < img.height) {
@@ -87,13 +98,22 @@ object Otsu {
       var wi = 0
       while (wi < out.wordsPerRow) {
         val x0 = rowBase + (wi << 6)
-        var b = math.min(64, img.width - (wi << 6)) - 1
+        val n = math.min(64, img.width - (wi << 6))
         var word = 0L
-        while (b >= 0) {
-          word = (word << 1) | (((px(x0 + b) & 0xff) - t1) >>> 31)
-          b -= 1
+        var b = 0
+        while (b + 8 <= n) {
+          val v = le.getLong(x0 + b)
+          val ink = ((~v & tt) | (~(v ^ tt) & (th - (v & ~High)))) & High
+          word |= (((ink >>> 7) * 0x0102040810204080L) >>> 56) << b
+          b += 8
         }
-        out.words(wordBase + wi) = word
+        var tail = 0L
+        var k = n - 1
+        while (k >= b) {
+          tail = (tail << 1) | (((px(x0 + k) & 0xff) - t1) >>> 31)
+          k -= 1
+        }
+        out.words(wordBase + wi) = word | (tail << b)
         wi += 1
       }
       y += 1

@@ -71,7 +71,18 @@ object Segmentation {
     var r = 0
     while (r < h) {
       val bit = 1L << r
-      bin.foreachInkInRow(band.top + r) { x => masks(x) |= bit }
+      val rowOff = (band.top + r) * bin.wordsPerRow
+      var wi = 0
+      while (wi < bin.wordsPerRow) {
+        // visit the set bits of the word, lowest column first
+        var w = bin.words(rowOff + wi)
+        while (w != 0L) {
+          val x = (wi << 6) + java.lang.Long.numberOfTrailingZeros(w)
+          if (x < bin.width) masks(x) |= bit
+          w &= w - 1
+        }
+        wi += 1
+      }
       r += 1
     }
     masks

@@ -2,8 +2,7 @@ package graft.pipeline
 
 import graft.image.{MediaStore, SynthMediaStore}
 import graft.model._
-import graft.ocr.GlyphClassifier
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,7 +27,8 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *   - the logical partition id is the Spark partition the row lands
   *     in: pmod(hash(key), numPartitions), the id HashPartitioning
   *     computes for `repartition(numPartitions, key)`;
-  *   - model weights are broadcast once per executor;
+  *   - model weights are compiled in: one classifier per executor JVM,
+  *     nothing broadcast;
   *   - media bytes are fetched inside the task (never shuffled);
   *   - resume is a broadcast anti-join against the tiny completed-
   *     partition set, so a killed run redoes only unfinished
@@ -69,11 +69,11 @@ object ExtractionJob {
   /** Pure transformation: extraction as a Dataset op (used by queries
     * and the bench; no checkpointing).
     */
-  def extract(spark: SparkSession, docs: Dataset[Doc], cfg: Config = Config()): Dataset[ExtractedDoc] = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(GlyphClassifier.defaultWeights)
-    byKey(docs, cfg).mapPartitions(new OcrStage(bc, cfg.mediaStore))
-  }
+  def extract(spark: SparkSession, docs: Dataset[Doc], cfg: Config = Config()): Dataset[ExtractedDoc] =
+    byKey(docs, cfg).mapPartitions(new OcrStage(cfg.mediaStore))(extractedDocEncoder)
+
+  /** Derived once: reflecting over the case class costs milliseconds a call. */
+  private lazy val extractedDocEncoder: Encoder[ExtractedDoc] = Encoders.product[ExtractedDoc]
 
   /** S9 (SURVEY.md §2.1): job-level metrics via Dataset.observe — the
     * Spark-native replacement for the reference's per-file progress
@@ -84,7 +84,6 @@ object ExtractionJob {
     */
   def extractObserved(spark: SparkSession, docs: Dataset[Doc], cfg: Config = Config())
       : (Dataset[ExtractedDoc], org.apache.spark.sql.Observation) = {
-    import spark.implicits._
     val obs = org.apache.spark.sql.Observation(s"graft-extract-${cfg.runId}")
     val observed = extract(spark, docs, cfg).observe(obs,
       count(lit(1)).as("docs"),
@@ -92,7 +91,7 @@ object ExtractionJob {
       sum(col("metrics.direct_spans")).cast("long").as("direct_spans"),
       sum(col("metrics.failed_spans")).cast("long").as("failed_spans"),
       sum(col("metrics.glyphs_classified")).cast("long").as("glyphs_classified"))
-    (observed.as[ExtractedDoc], obs)
+    (observed, obs)
   }
 
   final case class RunSummary(
@@ -131,14 +130,13 @@ object ExtractionJob {
       .select(col("pid"), col("doc_id"), col("spans"))
       .as[(Int, String, Seq[Span])]
 
-    val bc = spark.sparkContext.broadcast(GlyphClassifier.defaultWeights)
     val runId = cfg.runId
     val mediaStore = cfg.mediaStore
     val runDataDir = dataDir(outDir, cfg.runId)
     val chkDir = s"$outDir/checkpoint"
 
     pending.foreachPartition { (it: Iterator[(Int, String, Seq[Span])]) =>
-      val stage = new OcrStage(bc, mediaStore)
+      val stage = new OcrStage(mediaStore)
       val engine = stage.newEngine()
       val writers = scala.collection.mutable.Map.empty[Int, (java.nio.file.Path, BufferedWriter)]
       val metrics = scala.collection.mutable.Map.empty[Int, Array[Long]] // docs,lines,glyphs,ocr,direct,failed

@@ -4,7 +4,6 @@ import graft.image.{ImageCodec, MediaStore}
 import graft.model._
 import graft.ocr.{GlyphClassifier, OcrEngine}
 import graft.text.ArabicNormalizer
-import org.apache.spark.broadcast.Broadcast
 
 /** The per-partition extraction stage — the Spark-native equivalent of
   * the reference's per-page smart loop (extract_text_from_pdf_smart,
@@ -23,19 +22,18 @@ import org.apache.spark.broadcast.Broadcast
   *
   * Model handling mirrors the reference's lazy singleton PaddleOCR
   * (initialized once, reused for the whole run, smart.py:151-157): the
-  * classifier weights are broadcast once per executor; the engine is
-  * constructed lazily per task from the broadcast value. Inference is
+  * weights are compiled in from the font, so each executor JVM builds
+  * the one immutable `GlyphClassifier.default` on first use and nothing
+  * is broadcast; the engine is constructed per task. Inference is
   * batched — one model call per page covering every glyph on it.
   */
-final class OcrStage(
-    weights: Broadcast[Array[Long]],
-    store: MediaStore
-) extends (Iterator[Doc] => Iterator[ExtractedDoc]) with Serializable {
+final class OcrStage(store: MediaStore)
+    extends (Iterator[Doc] => Iterator[ExtractedDoc]) with Serializable {
 
-  /** Per-task engine over executor-shared broadcast weights — the ONE
-    * place engine construction lives (the resumable path reuses it).
+  /** Per-task engine over the JVM's shared classifier — the ONE place
+    * engine construction lives (the resumable path reuses it).
     */
-  def newEngine(): OcrEngine = new OcrEngine(new GlyphClassifier(weights.value))
+  def newEngine(): OcrEngine = new OcrEngine(GlyphClassifier.default)
 
   /** Per-task payload scratch (the stage closure is deserialized once
     * per task, so this is task-local): each image span's payload is

@@ -106,6 +106,39 @@ class PngCodecSpec extends AnyFunSuite {
     assert(e.getMessage.contains("dimensions"), e.getMessage)
   }
 
+  test("fuzz: truncated, byte-flipped and hostile-length PNGs decode or throw IllegalArgumentException") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // byte offsets of every chunk's length field
+    def chunkStarts(png: Array[Byte]): Seq[Int] =
+      Iterator.iterate(8)(i => i + 12 + java.nio.ByteBuffer.wrap(png, i, 4).getInt)
+        .takeWhile(_ + 8 <= png.length).toSeq
+    val mutated: Gen[Array[Byte]] = PngCodecProps.encoded.flatMap { case (_, png) =>
+      Gen.oneOf(
+        Gen.chooseNum(0, png.length - 1).map(n => java.util.Arrays.copyOf(png, n)),
+        Gen.listOfN(4, Gen.zip(Gen.chooseNum(0, png.length - 1), Gen.chooseNum(1, 255))).map { flips =>
+          val m = png.clone()
+          flips.take(1 + (flips.head._2 & 3)).foreach { case (at, x) => m(at) = (m(at) ^ x).toByte }
+          m
+        },
+        Gen.zip(Gen.oneOf(chunkStarts(png)), Gen.chooseNum(0, 64)).map { case (at, k) =>
+          val m = png.clone()
+          java.nio.ByteBuffer.wrap(m, at, 4).putInt(Int.MaxValue - k)
+          m
+        })
+    }
+    val prop = Prop.forAllNoShrink(mutated) { m =>
+      scala.util.Try(PngCodec.decode(m)) match {
+        case scala.util.Success(img) =>
+          // where the twin decodes it too, it agrees
+          scala.util.Try(ReferencePng.decode(m)).toOption.forall(ref => java.util.Arrays.equals(img.copyPixels, ref.copyPixels))
+        case scala.util.Failure(_: IllegalArgumentException) => true
+        case scala.util.Failure(e) => throw e
+      }
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(1500), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+  }
+
   test("full extraction pipeline over PNG media refs: exact span-sequence equality") {
     val spark = graft.pipeline.SparkTestSession.spark
     import spark.implicits._

@@ -28,6 +28,21 @@ object OcrKernelProps extends Properties("graft.ocr.kernels") {
     img
   }
 
+  /** A raster that is a view into a longer array: random bytes before
+    * it (a PGM header's place) and after it.
+    */
+  private val grayView: Gen[GrayImage] = for {
+    w <- Gen.chooseNum(1, 200)
+    h <- Gen.chooseNum(1, 12)
+    offset <- Gen.chooseNum(1, 17)
+    trailing <- Gen.chooseNum(0, 9)
+    seed <- Gen.long
+  } yield {
+    val px = new Array[Byte](offset + w * h + trailing)
+    new scala.util.Random(seed).nextBytes(px)
+    new GrayImage(w, h, px, offset)
+  }
+
   private val binary: Gen[BinaryImage] = for {
     w <- width
     h <- Gen.frequency(2 -> Gen.chooseNum(1, GlyphH - 1), 2 -> Gen.chooseNum(GlyphH, 64), 1 -> Gen.chooseNum(65, 80))
@@ -72,6 +87,11 @@ object OcrKernelProps extends Properties("graft.ocr.kernels") {
         Otsu.binarize(img).words.sameElements(ReferenceOcr.pack(img, Otsu.sampledThreshold(img)).words)
     }
 
+  property("Otsu.pack == per-pixel threshold on offset views, widths 1 to 200, t of 0 and 255") =
+    Prop.forAll(grayView, Gen.frequency(1 -> Gen.const(0), 1 -> Gen.const(255), 2 -> Gen.chooseNum(0, 255))) {
+      (img, t) => Otsu.pack(img, t).words.sameElements(ReferenceOcr.pack(img, t).words)
+    }
+
   property("columnMasks == per-pixel masks, bands of 1 to 80 rows") =
     Prop.forAll(binary.flatMap(b => band(b).map(b -> _))) { case (bin, bd) =>
       Segmentation.columnMasks(bin, bd).sameElements(ReferenceOcr.columnMasks(bin, bd))
@@ -88,11 +108,30 @@ object OcrKernelProps extends Properties("graft.ocr.kernels") {
   property("Deskew.Scorer == per-pixel row histogram at all 25 angles on random rasters") =
     Prop.forAll(binary)(scoresMatch)
 
+  /** Ink on every edge pixel, so unshear fills its first and last rows. */
+  private val framed: Gen[BinaryImage] = binary.map { bin =>
+    for (x <- 0 until bin.width) { bin.set(x, 0, true); bin.set(x, bin.height - 1, true) }
+    for (y <- 0 until bin.height) { bin.set(0, y, true); bin.set(bin.width - 1, y, true) }
+    bin
+  }
+
+  property("Deskew.unshear == per-pixel shear at all 25 grid angles and off-grid angles") =
+    Prop.forAll(Gen.oneOf(binary, framed), Gen.listOfN(3, Gen.chooseNum(-4000, 4000))) { (bin, offGrid) =>
+      val differ = (Deskew.AngleGridMdeg ++ offGrid).filterNot { a =>
+        val got = Deskew.unshear(bin, a)
+        val want = ReferenceOcr.unshear(bin, a)
+        got.height == want.height && got.words.sameElements(want.words)
+      }
+      differ.isEmpty :| s"unshear differs at $differ"
+    }
+
   property("rendered pages: pack, masks, glyphs and deskew scores match their twins") =
     Prop.forAll(page) { img =>
       val bin = Otsu.binarize(img)
       val packed = bin.words.sameElements(ReferenceOcr.pack(img, Otsu.sampledThreshold(img)).words)
-      val straight = Deskew.unshear(bin, Deskew.rankedAngles(bin).head)
+      val angle = Deskew.rankedAngles(bin).head
+      val straight = Deskew.unshear(bin, angle)
+      val unsheared = straight.words.sameElements(ReferenceOcr.unshear(bin, angle).words)
       val glyphsMatch = Segmentation.lineBands(straight).forall { bd =>
         val masks = Segmentation.columnMasks(straight, bd)
         masks.sameElements(ReferenceOcr.columnMasks(straight, bd)) &&
@@ -101,6 +140,7 @@ object OcrKernelProps extends Properties("graft.ocr.kernels") {
             Segmentation.extractGlyph(masks, l, r, bd.height) == ReferenceOcr.extractGlyph(masks, l, r, bd.height)
           }
       }
-      (packed :| "binarized page differs") && (glyphsMatch :| "masks or glyphs differ") && scoresMatch(bin)
+      (packed :| "binarized page differs") && (unsheared :| "unsheared page differs") &&
+        (glyphsMatch :| "masks or glyphs differ") && scoresMatch(bin)
     }
 }

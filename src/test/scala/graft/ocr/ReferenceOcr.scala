@@ -5,8 +5,8 @@ import graft.image.SynthFont.{GlyphH, GlyphW}
 
 /** Per-pixel reference forms of the word-level OCR kernels — the twins
   * OcrKernelProps pins `Otsu.pack`, `Segmentation.columnMasks`,
-  * `Segmentation.extractGlyph` and `Deskew.Scorer` against, bit for
-  * bit. Each reads one pixel (or one bit) at a time, so it states the
+  * `Segmentation.extractGlyph`, `Deskew.Scorer` and `Deskew.unshear`
+  * against, bit for bit. Each reads one pixel (or one bit) at a time, so it states the
   * kernel's meaning without any of its word tricks.
   */
 object ReferenceOcr {
@@ -82,5 +82,27 @@ object ReferenceOcr {
       y += 1
     }
     (rows.count(_ > 0), rows.map(c => c.toLong * c).sum)
+  }
+
+  /** Every ink pixel (x, y) moved to row y - shiftY(a, x) + off, on a
+    * raster grown by the edge shift; off lifts positive angles back up.
+    */
+  def unshear(bin: BinaryImage, a: Int): BinaryImage = {
+    if (a == 0) return bin
+    val sEdge = SynthRenderer.shiftY(a, bin.width - 1)
+    val off = math.max(0, sEdge)
+    val newH = bin.height + math.abs(sEdge)
+    val out = BinaryImage.blank(bin.width, newH)
+    var y = 0
+    while (y < bin.height) {
+      var x = 0
+      while (x < bin.width) {
+        val ny = y - SynthRenderer.shiftY(a, x) + off
+        if (bin(x, y) && ny >= 0 && ny < newH) out.set(x, ny, true)
+        x += 1
+      }
+      y += 1
+    }
+    out
   }
 }
