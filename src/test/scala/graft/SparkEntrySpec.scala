@@ -1,10 +1,11 @@
 package graft
 
 import graft.pipeline.SparkTestSession
+import graft.queries.QuerySpec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-contract pinning: every inventory query runs and returns
-  * rows on the smoke scale; oracle keys map to real queries; plans
+  * rows on the smoke scale; the registry declares the contract once; plans
   * keep column pruning intact (the scan must not read unused columns).
   */
 class SparkEntrySpec extends AnyFunSuite {
@@ -15,10 +16,39 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracleSql key has a matching query") {
-    val qs = SparkEntry.queries.keySet
-    val missing = SparkEntry.oracleSql.keySet -- qs
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+  test("query registry rejects duplicate names and declares the 122 contract queries") {
+    val spec = QuerySpec("q", (s, dir) => s.read.parquet(dir), "SELECT 1")
+    val err = intercept[IllegalArgumentException](
+      QuerySpec.unique(Seq(spec, spec.copy(name = "r"), spec.copy(oracle = "SELECT 2"))))
+    assert(err.getMessage.contains("declared more than once: q"), err.getMessage)
+    val contract = """a10_articles_dates a12_key_patterns a14_rollup a1_reassembly a3_page_conf
+      a4_weighted_confidence a5_flat_confidence a7_corpus_rollup a8_backend_stats
+      a9_doc_analysis ann_cosine_topk ann_ivf_topk ann_lsh_topk ann_sq8_topk dd_components
+      dd_containment dd_embed_components dd_embed_cosine dd_embed_cosine_lsh dd_exact_groups
+      dd_jaccard_pairs dd_minhash_lsh dd_ngram_jaccard dd_simhash dd_span_overlap ev_anomaly
+      ev_approx_distinct ev_funnel ev_histogram ev_json_extract ev_quantiles
+      ev_quantiles_approx ev_retention ev_rolling ev_sequence_match ev_transitions
+      eval_envelope ex_boilerplate_lines ex_domain_rank ex_html_main ex_html_meta
+      ex_layout_order ex_links ex_url_canonical ex_web_pipeline j1_backend_pivot
+      j2_resume_antijoin j4_dim_join j5_asof_bucketed j5_asof_join j6_range_join
+      j7_interval_overlap j8_fuzzy_join mm_audio_features mm_frame_sample mm_media_meta
+      mm_png_decode mm_resize ocr_conf_filter ocr_extract ocr_lines ocr_metrics p1_needs_ocr
+      p2_pdf_type p3_conf_floor r2r4_rankings r5_page_range src_json_ingest st_anomaly
+      st_dedup st_enrich st_funnel st_heavy_hitters st_ingest st_ingest_indexed
+      st_json_extract st_quantiles st_sessionize st_windowed_agg structured_doc
+      t2_normalize_basic t3_normalize_enhanced t4_preview t5_counts t6_a2_eval_view
+      t7_basename ta_bigram_logprob ta_bm25_indexed ta_bm25_topk ta_bpe_tokenize ta_chunking
+      ta_cms_freq ta_collocations ta_heavy_hitters ta_hybrid_search ta_keywords_tfidf
+      ta_ngram_freq ta_repetition ta_text_stats ta_token_freq ta_unigram_logprob
+      tp_bloom_prefilter tp_cluster_keep tp_corpus_filter tp_decontaminate tp_full_curation
+      tp_fuzzy_components tp_global_order tp_incremental_ingest tp_ingest_containment
+      tp_ingest_ngram tp_lsh_components tp_mixture_sample tp_nb_classify tp_pack_sequences
+      tp_pack_sequences_bpe tp_redact tp_stratified_sample tp_topk_per_group tp_upsample
+      tp_weighted_sample tp_winsorize""".split("\\s+").toSet
+    assert(contract.size == 122)
+    assert(QuerySpec.all.size == 122)
+    assert(SparkEntry.queries.keySet == contract)
+    assert(SparkEntry.oracleSql.keySet == contract)
   }
 
   test("all queries execute and return rows on sf0.001") {
