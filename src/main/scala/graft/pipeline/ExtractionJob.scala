@@ -2,9 +2,9 @@ package graft.pipeline
 
 import graft.image.{MediaStore, SynthMediaStore}
 import graft.model._
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import java.io.{BufferedWriter, OutputStreamWriter}
 import java.nio.charset.StandardCharsets
@@ -136,30 +136,30 @@ object ExtractionJob {
     val chkDir = s"$outDir/checkpoint"
 
     pending.foreachPartition { (it: Iterator[(Int, String, Seq[Span])]) =>
+      // byKey sends a row with pid p to Spark partition p, so this task
+      // writes exactly one pid; a row from another pid would be committed
+      // under this task's mark
+      val pid = TaskContext.getPartitionId()
       val stage = new OcrStage(mediaStore)
       val engine = stage.newEngine()
-      val writers = scala.collection.mutable.Map.empty[Int, (java.nio.file.Path, BufferedWriter)]
-      val metrics = scala.collection.mutable.Map.empty[Int, Array[Long]] // docs,lines,glyphs,ocr,direct,failed
-      it.foreach { case (pid, docId, spans) =>
+      lazy val tmp = Paths.get(runDataDir, s".pid=$pid.jsonl.tmp-${java.util.UUID.randomUUID()}")
+      lazy val w = new BufferedWriter(new OutputStreamWriter(Files.newOutputStream(tmp), StandardCharsets.UTF_8))
+      val m = new Array[Long](6) // docs,lines,glyphs,ocr,direct,failed
+      it.foreach { case (rowPid, docId, spans) =>
+        if (rowPid != pid)
+          throw new IllegalStateException(s"row of pid $rowPid reached the task of partition $pid")
         val out = stage.extractDoc(Doc(docId, spans), engine)
-        val (_, w) = writers.getOrElseUpdate(pid, {
-          val tmp = Paths.get(runDataDir, s".pid=$pid.jsonl.tmp-${java.util.UUID.randomUUID()}")
-          (tmp, new BufferedWriter(new OutputStreamWriter(Files.newOutputStream(tmp), StandardCharsets.UTF_8)))
-        })
         w.write(JsonIo.toJson(out)); w.write("\n")
-        val m = metrics.getOrElseUpdate(pid, new Array[Long](6))
         m(0) += 1; m(1) += out.metrics.lines_segmented; m(2) += out.metrics.glyphs_classified
         m(3) += out.metrics.ocr_spans; m(4) += out.metrics.direct_spans; m(5) += out.metrics.failed_spans
       }
-      // input exhausted: commit data (rename), then marks — in that
+      // input exhausted: commit data (rename), then the mark — in that
       // order, so a mark implies durable data
-      val chk = new CheckpointStore(chkDir)
-      writers.foreach { case (pid, (tmp, w)) =>
+      if (m(0) > 0) {
         w.close()
         Files.move(tmp, Paths.get(runDataDir, s"pid=$pid.jsonl"),
           StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        val m = metrics(pid)
-        chk.markCompleted(CheckpointRow(runId, pid, m(0), m(1), m(2), m(3), m(4), m(5),
+        new CheckpointStore(chkDir).markCompleted(CheckpointRow(runId, pid, m(0), m(1), m(2), m(3), m(4), m(5),
           System.currentTimeMillis()))
       }
     }
@@ -174,25 +174,6 @@ object ExtractionJob {
       failedSpans = rows.map(_.failed_spans).sum)
   }
 
-  /** Output schema of the resumable sink. */
-  val outputSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType),
-    StructField("spans", ArrayType(StructType(Seq(
-      StructField("kind", StringType),
-      StructField("text", StringType),
-      StructField("media_ref", StringType),
-      StructField("offset", IntegerType))))),
-    StructField("metrics", StructType(Seq(
-      StructField("lines_segmented", IntegerType),
-      StructField("glyphs_classified", IntegerType),
-      StructField("conf_histogram", ArrayType(IntegerType)),
-      StructField("mean_confidence", DoubleType),
-      StructField("ocr_spans", IntegerType),
-      StructField("direct_spans", IntegerType),
-      StructField("failed_spans", IntegerType)))),
-    StructField("error", StringType)
-  ))
-
   /** Data directory of one run inside an outDir (mirrors the
     * checkpoint's run_id=<run>/ layout).
     */
@@ -202,10 +183,9 @@ object ExtractionJob {
     * the outDir (only meaningful when runs processed disjoint inputs).
     */
   def readOutput(spark: SparkSession, outDir: String,
-                 runId: String = "run-0"): Dataset[ExtractedDoc] = {
-    import spark.implicits._
-    spark.read.schema(outputSchema).json(s"${dataDir(outDir, runId)}/*.jsonl").as[ExtractedDoc]
-  }
+                 runId: String = "run-0"): Dataset[ExtractedDoc] =
+    spark.read.schema(extractedDocEncoder.schema).json(s"${dataDir(outDir, runId)}/*.jsonl")
+      .as(extractedDocEncoder)
 }
 
 /** Minimal JSON writer for the resumable sink rows. */
