@@ -187,8 +187,13 @@ object TrainingQueries {
           (col("value") < col("lo") || col("value") > col("hi"))
             .as("was_outlier"))
     },
-      oracle = """WITH b AS (SELECT event_type, quantile_cont(value, 0.05) AS lo,
-          |    quantile_cont(value, 0.95) AS hi
+      // bounds rounded to 6 places: DuckDB's interpolation can land one
+      // ulp below a bound Spark states exactly (238.41999999999996 vs
+      // 238.42), flipping was_outlier for values equal to it. Event
+      // values have at most 2 decimals, so every bound has at most 4 and
+      // no value lies between the rounded and the exact bound.
+      oracle = """WITH b AS (SELECT event_type, round(quantile_cont(value, 0.05), 6) AS lo,
+          |    round(quantile_cont(value, 0.95), 6) AS hi
           |  FROM events WHERE value IS NOT NULL GROUP BY 1)
           |SELECT e.event_id, e.event_type,
           |  round(least(greatest(e.value, b.lo), b.hi), 6) AS clipped,
