@@ -76,7 +76,7 @@ object SynthRenderer {
     words.map(wordWidth).sum + (words.size - 1) * WordGap
 
   /** Canvas dimensions for a given text+angle (used by metadata ops
-    * and by the oracle constants in SparkEntry).
+    * and by the oracle constants in graft.queries.MediaQueries).
     */
   def dimensions(text: String, angleMdeg: Int): (Int, Int) =
     dims(layout(text), angleMdeg)
