@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object MediaQueries {
 
+  /** Angle index of a doc's first and second image span. */
   private val a1i = s"(doc_id % ${Vocab.Angles.length})"
   private val a2i = s"((doc_id // 5) % ${Vocab.Angles.length})"
 
