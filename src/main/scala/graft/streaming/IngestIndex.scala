@@ -63,9 +63,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * only state partitions with batch_id < k and OVERWRITES its own
   * `batch_id=k` partitions (sink and state), so a replayed batch
   * reconstructs the identical decision and the identical appended
-  * state. The admission semantics are exactly `IngestStream.gate` —
-  * `st_ingest_indexed` is checked against the SAME chained DuckDB
-  * oracle as `st_ingest`.
+  * state. The admission decision is the one `IngestStream.gate` runs —
+  * both call `Dedup.indexedIngestFilter`, this object with persisted
+  * state — and `st_ingest_indexed` is checked against the SAME chained
+  * DuckDB oracle as `st_ingest`.
   */
 object IngestIndex {
 
@@ -244,6 +245,10 @@ object IngestIndex {
     import org.apache.hadoop.fs.Path
     val fs = new Path(stateDir).getFileSystem(hadoop)
     recoverCompaction(spark, stateDir) // finish any interrupted swap first
+    // every temp left now predates any marker (a crash in phase 1):
+    // delete them all, so a marker only ever sits beside temps written
+    // by the run that wrote it
+    Tables.foreach { case (t, _) => fs.delete(new Path(s"$stateDir/$t.compact"), true) }
     // phase 1: fully write every consolidated slice to its temp dir
     val todo = Tables.filter { case (t, pc) =>
       val root = new Path(s"$stateDir/$t")
@@ -252,7 +257,6 @@ object IngestIndex {
         .filter(_.getPath.getName.stripPrefix("batch_id=").toLong <= upToBatch)
       if (batchDirs.length > 1) {
         val tmp = new Path(s"$stateDir/$t.compact")
-        fs.delete(tmp, true)
         spark.read.option("basePath", s"$stateDir/$t").parquet(s"$stateDir/$t")
           .where(col("batch_id") <= upToBatch)
           .drop("batch_id")

@@ -14,14 +14,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the batch gate per file: the reference set is a moving target that
   * only the stream's processing order defines.
   *
-  * Scale shape: each micro-batch runs ONE `incrementalIngestFilter`
-  * (digest anti-join + cross-set banded MinHash, candidate volume
-  * linear in the batch) against a reference set read back from the
-  * admitted sink — no unbounded driver/executor state; the "state" IS
-  * the idempotent batch-id-partitioned parquet sink, which replays
-  * safely after a crash (a replayed batch overwrites its own partition
-  * and reads only partitions with SMALLER batch ids as corpus, so
-  * re-admission is deterministic).
+  * Scale shape: each micro-batch re-sketches its reference set and runs
+  * the one admission gate, `Dedup.indexedIngestFilter` (digest
+  * anti-join + cross-set banded MinHash, candidate volume linear in
+  * the batch), through `Dedup.incrementalIngestFilter`; the reference
+  * set is read back from the admitted sink — no unbounded
+  * driver/executor state; the "state" IS the idempotent
+  * batch-id-partitioned parquet sink, which replays safely after a
+  * crash (a replayed batch overwrites its own partition and reads
+  * only partitions with SMALLER batch ids as corpus, so re-admission
+  * is deterministic).
   */
 object IngestStream {
 

@@ -62,10 +62,11 @@ class RobustnessSpec extends AnyFunSuite {
     // admitted (the gate dedups against the REFERENCE set only), 6 fresh
     assert(kept == Set(4L, 5L, 6L), s"re-sketch gate: $kept")
 
-    val (sm, sb) = Dedup.sketchSlices(weird.where(isCorpus), bands = 8, rowsPerBand = 4)
-    val batch = weird.where(!isCorpus)
-    val (bm, bb) = Dedup.sketchSlices(batch, bands = 8, rowsPerBand = 4)
-    val keptIdx = Dedup.indexedIngestFilter(bm, bb, sm, sb, threshold = 0.8)
+    val sm = Dedup.sketchMeta(weird.where(isCorpus))
+    val bm = Dedup.sketchMeta(weird.where(!isCorpus))
+    val keptIdx = Dedup.indexedIngestFilter(bm, Dedup.bandedOf(bm, bands = 8, rowsPerBand = 4),
+        Dedup.InMemorySketchState(sm, Dedup.bandedOf(sm, bands = 8, rowsPerBand = 4)),
+        threshold = 0.8)
       .as[Long].collect().toSet
     assert(keptIdx == kept, s"indexed gate diverged: $keptIdx vs $kept")
 

@@ -60,7 +60,7 @@ object SketchKernelProps extends Properties("graft.operators.kernels") {
       (ws, bands, rpb) =>
         // width-1 shingles ARE the word set: the combined-hash route's
         // recovered 31-bit base must band identically to the historical
-        // token-string route (bandedPoly's two faces agree at n=1)
+        // token-string route (bandedOf bands through the combined route)
         val viaCombined = longs(SketchKernels.minhashPolyBucketsFromCombined(
           SketchKernels.shingleHashes(arr(ws), 1), bands, rpb))
         val viaStrings = longs(SketchKernels.minhashPolyBuckets(

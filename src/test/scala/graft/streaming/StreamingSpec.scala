@@ -237,7 +237,8 @@ class StreamingSpec extends AnyFunSuite {
     val state = new IngestIndex.PrunedSketchState(spark, stateDir, batchId = 0L,
       p = IngestIndex.DefaultStateBuckets)
     val batch = Seq((100L, toks(0, 30))).toDF("doc_id", "text")
-    val (bm, bb) = graft.operators.Dedup.sketchSlices(batch, 8, 4)
+    val bm = graft.operators.Dedup.sketchMeta(batch)
+    val bb = graft.operators.Dedup.bandedOf(bm, 8, 4)
     val cases = Seq(
       ("pdig", state.digests(bm.select(col("digest")))),
       ("pbkt", state.banded(bb.select(col("band"), col("bucket")).distinct())),
@@ -313,11 +314,18 @@ class StreamingSpec extends AnyFunSuite {
     // probe pruning still fires on the consolidated layout
     val state = new IngestIndex.PrunedSketchState(spark, sdA, batchId = 2L,
       p = IngestIndex.DefaultStateBuckets)
-    val (_, bb) = graft.operators.Dedup.sketchSlices(b1, 8, 4)
+    val bb = graft.operators.Dedup.bandedOf(graft.operators.Dedup.sketchMeta(b1), 8, 4)
     val plan = state.banded(bb.select(col("band"), col("bucket")).distinct())
       .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*pbkt".r.findFirstIn(plan).isDefined,
       s"pruning lost after compaction:\n${plan.take(900)}")
+    // a temp left behind by an earlier crashed phase 1 is stale: a
+    // compaction with nothing to do must still delete it, or a later
+    // marker would swap it in as if this run had written it
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$sdA/digests.compact/pdig=0"))
+    IngestIndex.compactState(spark, sdA, upToBatch = 0L)
+    val temps = new java.io.File(sdA).listFiles().map(_.getName).filter(_.endsWith(".compact"))
+    assert(temps.isEmpty, s"stale compaction temps survived: ${temps.mkString(",")}")
   }
 
   test("state compaction crash window: killed between delete and rename, reopen recovers, decisions identical") {
@@ -387,17 +395,20 @@ class StreamingSpec extends AnyFunSuite {
     val batch = Seq((10L, s"$wrap $core"), (11L, (0 until 30).map(i => s"f_$i").mkString(" ")))
       .toDF("doc_id", "text")
     // rowsPerBand=1 for excerpt-level recall (the documented setting)
-    val (sm, sb) = graft.operators.Dedup.sketchSlices(corpus, bands = 16, rowsPerBand = 1)
-    val (bm, bb) = graft.operators.Dedup.sketchSlices(batch, bands = 16, rowsPerBand = 1)
+    val sm = graft.operators.Dedup.sketchMeta(corpus)
+    val bm = graft.operators.Dedup.sketchMeta(batch)
     def keptIdx(ct: Option[Double]) = graft.operators.Dedup.indexedIngestFilter(
-        bm, bb, graft.operators.Dedup.InMemorySketchState(sm, sb),
+        bm, graft.operators.Dedup.bandedOf(bm, bands = 16, rowsPerBand = 1),
+        graft.operators.Dedup.InMemorySketchState(
+          sm, graft.operators.Dedup.bandedOf(sm, bands = 16, rowsPerBand = 1)),
         threshold = 0.8, containment = ct)
       .as[Long].collect().toSet
     assert(keptIdx(None) == Set(10L, 11L),
       "control: the pure-Jaccard gate cannot see the excerpt")
     assert(keptIdx(Some(0.9)) == Set(11L),
       "containment OR-verify must reject the excerpt on the indexed face")
-    // interchangeability: the re-sketching face decides identically
+    // both entry points reach the one gate: the re-sketching face
+    // decides identically
     val all = corpus.select(col("doc_id"), col("text"), lit(true).as("is_corpus"))
       .unionByName(batch.select(col("doc_id"), col("text"), lit(false).as("is_corpus")))
     val keptInc = graft.operators.Dedup.incrementalIngestFilter(
