@@ -40,9 +40,6 @@ final class GrayImage(val width: Int, val height: Int, val pixels: Array[Byte], 
     while (i < end) { h(pixels(i) & 0xff) += 1; i += stride }
     h
   }
-
-  /** Exact-size copy of the raster (for equality checks / export). */
-  def copyPixels: Array[Byte] = java.util.Arrays.copyOfRange(pixels, offset, offset + size)
 }
 
 object GrayImage {

@@ -26,19 +26,6 @@ object ImageOps {
     }
     out
   }
-
-  /** Fraction of ink-classified pixels (cheap feature extraction). */
-  def inkRatio(img: GrayImage): Double = {
-    val t = graft.ocr.Otsu.threshold(img.histogram)
-    var ink = 0
-    var i = img.offset
-    val end = img.offset + img.size
-    while (i < end) {
-      if ((img.pixels(i) & 0xff) <= t) ink += 1
-      i += 1
-    }
-    ink.toDouble / img.size
-  }
 }
 
 /** Multi-frame payloads ("video"): a concatenation of PGM frames.

@@ -161,9 +161,6 @@ object Deskew {
     }
   }
 
-  /** Best single angle (convenience; the engine uses rankedAngles). */
-  def detectAngle(bin: BinaryImage): Int = rankedAngles(bin).head
-
   /** Invert the shear for the given angle: each run of equal shift
     * moves as one masked word per row.
     */

@@ -30,21 +30,11 @@ object Dedup {
   def wordSeqCol(text: Column): Column =
     filter(split(lower(text), "\\s+"), x => x =!= "")
 
-  /** Distinct word n-gram shingles — the n-gram unit for Jaccard
-    * similarity (n consecutive words joined with one space). Captures
-    * local word ORDER, which unigram word sets cannot: two docs with
-    * the same vocabulary but different phrasing share unigrams yet few
-    * shingles. Docs with fewer than n words shingle to an empty set.
-    */
-  def shinglesCol(text: Column, n: Int): Column = {
-    val w = wordSeqCol(text)
-    when(size(w) >= n,
-      array_distinct(transform(sequence(lit(0), size(w) - n),
-        i => array_join(slice(w, i + 1, lit(n)), " "))))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** Distinct shingles as SORTED cross-engine poly-hash LONGS, built
+  /** Distinct word n-gram shingles — n consecutive words joined with
+    * one space, the n-gram unit for Jaccard similarity. They capture
+    * local word ORDER, which unigram word sets cannot; docs with fewer
+    * than n words shingle to an empty set. Returned as SORTED
+    * cross-engine poly-hash LONGS, built
     * in one native pass over the word array (no shingle strings, no
     * per-element HOF re-evaluation): the verify join then merges
     * 8-byte sets instead of re-hashing multi-word strings per
@@ -971,8 +961,6 @@ object Dedup {
         converged = isStarForest(next)
         pendingRounds.dropRight(1).foreach(ColumnBridge.unpersistCheckpoint(_))
         pendingRounds.dropInPlace(pendingRounds.size - 1)
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc] round $it converged=$converged")
       }
     }
     // silent non-convergence would hand downstream keep/drop WRONG

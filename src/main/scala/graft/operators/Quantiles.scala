@@ -29,8 +29,10 @@ object Quantiles {
   val ExactMaxRows: Long = 100000000L
 
   /** One row count decides the regime for a whole statement (never
-    * per-column). Parquet row counts come from footer metadata — a
-    * driver-cheap decision, the DomainRank size-switch idiom.
+    * per-column): `df.count()`, one Spark job over whatever `df` is.
+    * Callers pass the UNFILTERED table scan, whose count reads no
+    * column (its `ReadSchema` is empty); a filter would make it scan
+    * and test the filtered column first.
     */
   def useExact(df: DataFrame, exactMaxRows: Long = ExactMaxRows): Boolean =
     df.count() <= exactMaxRows

@@ -3,6 +3,8 @@ package graft.queries
 import graft.operators.Dedup
 import graft.queries.EventQueries.rankOk
 import graft.queries.QueryInputs._
+import graft.streaming.EventsStream
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batch twins of the Structured Streaming surface (`st_*`): each runs
@@ -10,6 +12,13 @@ import org.apache.spark.sql.functions._
   * the twin in StreamingSpec/MultimodalSpec.
   */
 object StreamingQueries {
+
+  /** The events table read under the stream's declared schema, so each
+    * twin below feeds its operator exactly the columns and types the
+    * stream's file source does.
+    */
+  private def streamEvents(s: SparkSession, dir: String): DataFrame =
+    s.read.schema(EventsStream.eventsSchema).parquet(s"$dir/events.parquet")
 
   val specs: Seq[QuerySpec] = Seq(
     // Streaming face of the quantile summary: per-(day-window, type)
@@ -25,7 +34,7 @@ object StreamingQueries {
       // values would inflate n without entering the rank counts —
       // the review-pass latent-asymmetry finding
       val evSrc = events(s, dir).where(col("ts").isNotNull && col("value").isNotNull)
-      val q = graft.streaming.EventsStream.quantilesWindowedAgg(evSrc, acc)
+      val q = EventsStream.quantilesWindowedAgg(evSrc, acc)
         .select(col("window_start_ms"), col("event_type"), col("n"),
           col("ap")(0).as("a50"), col("ap")(1).as("a90"), col("ap")(2).as("a99"))
       val ev = evSrc.select(
@@ -52,7 +61,7 @@ object StreamingQueries {
     // the oracle-checkable face of the readStream query (the stream
     // itself is pinned equal to this twin in MultimodalSpec)
     QuerySpec("st_windowed_agg", (s, dir) =>
-      graft.streaming.EventsStream.batchEquivalent(s, s"$dir/events.parquet")
+      EventsStream.windowedAgg(streamEvents(s, dir))
         .select(unix_timestamp(col("window_start")).cast("long").as("window_start_epoch"),
           col("event_type"), col("n"), col("total_value")),
       oracle = ("SELECT CAST(epoch(time_bucket(INTERVAL '5 minutes', ts)) AS BIGINT) AS window_start_epoch, " +
@@ -62,7 +71,7 @@ object StreamingQueries {
     // feeding the watermarked windowed aggregation (one definition
     // runs as stream and twin; stream ≡ twin pinned in StreamingSpec)
     QuerySpec("st_json_extract", (s, dir) =>
-      graft.streaming.EventsStream.jsonBatchEquivalent(s, s"$dir/events.parquet")
+      EventsStream.jsonWindowedAgg(streamEvents(s, dir))
         .select(unix_timestamp(col("window_start")).cast("long").as("window_start_epoch"),
           col("event_type"), col("n_with_k"), col("sum_k")),
       oracle = ("SELECT CAST(epoch(time_bucket(INTERVAL '5 minutes', ts)) AS BIGINT) AS window_start_epoch, " +
@@ -77,14 +86,12 @@ object StreamingQueries {
     // undercount bracketed — counter values are merge-order-dependent
     // and never oracled. Stream ≡ contract pinned in StreamingSpec.
     QuerySpec("st_heavy_hitters", (s, dir) => {
-      val evPath = s"$dir/events.parquet"
-      val sk = graft.streaming.EventsStream.heavyBatchEquivalent(s, evPath)
+      val sk = EventsStream.heavyHittersWindowedAgg(streamEvents(s, dir))
       val est = sk.select(col("window_start_ms"), col("n"),
           explode(col("hh")).as("e"))
         .select(col("window_start_ms"), col("n"),
           col("e.key").as("key"), col("e.est").as("est"))
-      val ev = s.read.schema(graft.streaming.EventsStream.eventsSchema)
-        .parquet(evPath).where(col("event_id").isNotNull)
+      val ev = streamEvents(s, dir).where(col("event_id").isNotNull)
       val key = when(col("event_id") % 10 < 5,
           concat(lit("hot_"), (col("event_id") % 10).cast("string")))
         .otherwise(concat(lit("cold_"), col("event_id").cast("string")))
@@ -114,8 +121,7 @@ object StreamingQueries {
     // (stateless join, only the agg holds state; stream ≡ twin pinned
     // in StreamingSpec)
     QuerySpec("st_enrich", (s, dir) =>
-      graft.streaming.EventsStream.enrichedBatchEquivalent(
-          s, s"$dir/events.parquet",
+      EventsStream.enrichedAgg(streamEvents(s, dir),
           s.read.parquet(s"$dir/nation.parquet")
             .select(col("n_nationkey").cast("long").as("n_nationkey"),
               col("n_name")))
@@ -130,7 +136,7 @@ object StreamingQueries {
     // event-time timeout) restated as two batch window functions
     // (stream ≡ twin pinned in StreamingSpec)
     QuerySpec("st_anomaly", (s, dir) =>
-      graft.streaming.EventsStream.anomalyBatch(events(s, dir)),
+      EventsStream.anomalyBatch(events(s, dir)),
       oracle = """SELECT user_id, window_start_ms, event_id, value, z FROM (
           |  SELECT user_id,
           |    CAST(epoch_ms(time_bucket(INTERVAL '1 day', ts)) AS BIGINT) AS window_start_ms,
@@ -149,7 +155,7 @@ object StreamingQueries {
     // ev_funnel's chained min-after semantics, which needs the full
     // event set per stage and is the BATCH-only face.
     QuerySpec("st_funnel", (s, dir) =>
-      graft.streaming.EventsStream.funnelBatchEquivalent(s, s"$dir/events.parquet"),
+      EventsStream.funnelAgg(streamEvents(s, dir)),
       oracle = """WITH f AS (SELECT user_id,
           |    min(CASE WHEN event_type = 'view' THEN ts END) AS v,
           |    min(CASE WHEN event_type = 'click' THEN ts END) AS c,
@@ -178,7 +184,7 @@ object StreamingQueries {
     // statement of first arrival — the batch face of
     // EventsStream.dedupStream (stream ≡ twin pinned in StreamingSpec)
     QuerySpec("st_dedup", (s, dir) =>
-      graft.streaming.EventsStream.dedupBatch(events(s, dir))
+      EventsStream.dedupBatch(events(s, dir))
         .select(col("user_id"), col("event_type"), col("event_id"),
           unix_micros(col("ts").cast("timestamp")).as("ts_epoch"), col("value")),
       oracle = ("WITH r AS (SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_epoch, value, " +

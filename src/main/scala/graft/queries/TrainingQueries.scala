@@ -173,10 +173,11 @@ object TrainingQueries {
     // Output is per-row (the transform itself), so no double-sum
     // order dependence anywhere.
     QuerySpec("tp_winsorize", (s, dir) => {
-      val ev = events(s, dir).where(col("value").isNotNull)
       // r07: clip bounds through the Quantiles size switch (exact at
-      // every driver scale — same oracle; see ev_quantiles)
-      val exact = graft.operators.Quantiles.useExact(ev)
+      // every driver scale — same oracle; see ev_quantiles). The switch
+      // counts the unfiltered scan, as ev_quantiles does.
+      val exact = graft.operators.Quantiles.useExact(events(s, dir))
+      val ev = events(s, dir).where(col("value").isNotNull)
       val bounds = ev.groupBy(col("event_type")).agg(
         graft.operators.Quantiles.pct(exact, "value", 0.05).as("lo"),
         graft.operators.Quantiles.pct(exact, "value", 0.95).as("hi"))

@@ -45,13 +45,4 @@ object DocsStream {
       }
       .start()
   }
-
-  /** Drain all currently-available input, then stop (test/dev). */
-  def runOnce(spark: SparkSession, inDir: String, outDir: String,
-              checkpointDir: String,
-              cfg: ExtractionJob.Config = ExtractionJob.Config()): Unit = {
-    val q = extractStream(spark, inDir, outDir, checkpointDir, cfg)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
 }

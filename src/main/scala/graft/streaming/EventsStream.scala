@@ -1,15 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface. The reference is batch-only
   * (SURVEY.md §2.8 — resumability there is the checkpoint table), but
   * a production extraction lake also ingests event/metrics streams;
-  * this module covers that capability: a watermarked windowed
-  * aggregation over the `events` table schema, runnable incrementally
-  * (`readStream`) or as the equivalent batch query for oracle checks.
+  * this module covers that capability over the `events` table schema.
+  * Each operator is one function that runs both on a `readStream`
+  * source and, applied to a batch read, as the twin that the `st_*`
+  * driver queries run and the oracles check.
   */
 object EventsStream {
 
@@ -33,33 +34,6 @@ object EventsStream {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
 
-  /** Shared harness for the complete-mode windowed aggregations: run
-    * `agg` over the parquet dir's files (one per micro-batch) until
-    * all available input is processed; results land in an in-memory
-    * table (deterministic: static input, complete output).
-    */
-  private def runCompleteWith(spark: SparkSession, dir: String, queryName: String,
-                              agg: DataFrame => DataFrame): DataFrame = {
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-    val q = agg(stream).writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
-
-  def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    runCompleteWith(spark, dir, queryName, windowedAgg)
-
-  /** Batch twin of windowedAgg (the oracle). */
-  def batchEquivalent(spark: SparkSession, dir: String): DataFrame =
-    windowedAgg(spark.read.schema(eventsSchema).parquet(dir))
-
   // ---- streaming JSON-props rollup (round-4 verdict #8) -------------------
 
   /** Watermarked windowed rollup of the JSON props bag: stateless
@@ -78,12 +52,6 @@ object EventsStream {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_with_k"), col("sum_k"))
 
-  def runJsonOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    runCompleteWith(spark, dir, queryName, jsonWindowedAgg)
-
-  def jsonBatchEquivalent(spark: SparkSession, dir: String): DataFrame =
-    jsonWindowedAgg(spark.read.schema(eventsSchema).parquet(dir))
-
   // ---- streaming first-touch funnel ----------------------------------------
 
   /** FIRST-TOUCH funnel through the state store: a user reaches stage
@@ -99,9 +67,9 @@ object EventsStream {
     * order-insensitive state (the two definitions are both standard;
     * the divergence case is a user who clicked both before and after
     * their first view). ONE definition runs as the stream and the
-    * batch twin/oracle. Complete-mode memory sink is the sandbox
-    * harness choice (as for the other complete-mode ops); production
-    * emits Update-mode upserts.
+    * batch twin/oracle. The tests drain it in complete mode (as the
+    * other windowed aggregations); production emits Update-mode
+    * upserts.
     */
   def funnelAgg(events: DataFrame): DataFrame =
     events.where(col("user_id").isNotNull && col("ts").isNotNull)
@@ -116,12 +84,6 @@ object EventsStream {
           + when(col("c").isNotNull && col("c") > col("v") &&
               col("p").isNotNull && col("p") > col("c"), 1L).otherwise(0L))
           .as("reached"))
-
-  def runFunnelOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    runCompleteWith(spark, dir, queryName, funnelAgg)
-
-  def funnelBatchEquivalent(spark: SparkSession, dir: String): DataFrame =
-    funnelAgg(spark.read.schema(eventsSchema).parquet(dir))
 
   // ---- streaming windowed quantile sketches -------------------------------
 
@@ -144,9 +106,6 @@ object EventsStream {
         expr(s"approx_percentile(value, array(0.5D, 0.9D, 0.99D), $accuracy)").as("ap"))
       .select(unix_millis(col("window.start").cast("timestamp")).as("window_start_ms"),
         col("event_type"), col("n"), col("ap"))
-
-  def runQuantilesOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    runCompleteWith(spark, dir, queryName, quantilesWindowedAgg(_))
 
   // ---- streaming windowed heavy hitters -----------------------------------
 
@@ -180,12 +139,6 @@ object EventsStream {
         col("hh"), col("n"))
   }
 
-  def runHeavyOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    runCompleteWith(spark, dir, queryName, heavyHittersWindowedAgg(_))
-
-  def heavyBatchEquivalent(spark: SparkSession, dir: String): DataFrame =
-    heavyHittersWindowedAgg(spark.read.schema(eventsSchema).parquet(dir))
-
   // ---- stream-static enrichment join --------------------------------------
 
   /** Stream-static broadcast enrichment: each micro-batch hash-joins
@@ -210,14 +163,6 @@ object EventsStream {
       .select(col("window.start").as("window_start"), col("n_name"),
         col("n"), col("total_value"))
 
-  def runEnrichedOnce(spark: SparkSession, dir: String, dim: DataFrame,
-                      queryName: String): DataFrame =
-    runCompleteWith(spark, dir, queryName, enrichedAgg(_, dim))
-
-  def enrichedBatchEquivalent(spark: SparkSession, dir: String,
-                              dim: DataFrame): DataFrame =
-    enrichedAgg(spark.read.schema(eventsSchema).parquet(dir), dim)
-
   // ---- streaming windowed per-user anomaly flags --------------------------
 
   final case class WinAnomaly(user_id: Long, window_start_ms: Long, event_id: Long,
@@ -236,7 +181,8 @@ object EventsStream {
     * (later ones would be below-watermark late and dropped upstream).
     * State per key is one window's events for one user, freed at
     * emission: bounded by active windows x active users, never
-    * corpus-sized (the sessionize state contract).
+    * corpus-sized (the sessionize state contract). StreamingSpec pins
+    * the eviction from each micro-batch's state-store row count.
     */
   def anomalyStream(events: Dataset[Sessionize.Event],
                     watermarkDelay: String = "10 minutes",
@@ -308,36 +254,6 @@ object EventsStream {
         col("event_id"), col("value"),
         round((col("value") - col("mu")) / col("sd"), 6).as("z"))
       .where(col("z") >= zThreshold)
-  }
-
-  def runAnomalyOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    runAnomalyWithStateRows(spark, dir, queryName)._1
-
-  /** runAnomalyOnce plus the per-micro-batch state-store row counts
-    * (numRowsTotal from each batch's progress event) — the eviction
-    * proof (round-5 verdict #7): a closed (user, window) key's buffer
-    * must LEAVE the store at its timeout, so across a long trickle the
-    * count tracks ACTIVE windows x users and never the full history
-    * (asserted in StreamingSpec next to the dedup-TTL trickle test).
-    */
-  def runAnomalyWithStateRows(spark: SparkSession, dir: String,
-                              queryName: String): (DataFrame, Seq[Long]) = {
-    import spark.implicits._
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Sessionize.Event]
-    val q = anomalyStream(stream).toDF().writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val stateRows = q.recentProgress.toSeq
-      .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
-    (spark.table(queryName), stateRows)
   }
 
   // ---- streaming exact-dedup (first arrival per key) ----------------------
@@ -450,34 +366,5 @@ object EventsStream {
     events.withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .select(col("user_id"), col("event_type"), col("event_id"), col("ts"), col("value"))
-  }
-
-  /** Run the streaming dedup over a parquet dir (one file per
-    * micro-batch, arrival order = file modification order).
-    */
-  def runDedupOnce(spark: SparkSession, dir: String, queryName: String): DataFrame =
-    runDedupWith(spark, dir, queryName, dedupStream)
-
-  /** Same harness for the TTL variant. */
-  def runDedupTtlOnce(spark: SparkSession, dir: String, queryName: String,
-                      watermarkDelay: String, ttlMs: Long): DataFrame =
-    runDedupWith(spark, dir, queryName, dedupStreamTtl(_, watermarkDelay, ttlMs))
-
-  private def runDedupWith(spark: SparkSession, dir: String, queryName: String,
-                           dedup: Dataset[Sessionize.Event] => Dataset[FirstEvent]): DataFrame = {
-    import spark.implicits._
-    val stream = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Sessionize.Event]
-    val q = dedup(stream).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
   }
 }

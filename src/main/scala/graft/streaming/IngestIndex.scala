@@ -378,17 +378,6 @@ object IngestIndex {
       .start()
   }
 
-  /** Drain all currently-available input, then stop (test/dev). */
-  def runOnceIndexed(spark: SparkSession, stateDir: String, inDir: String,
-                     outDir: String, checkpointDir: String,
-                     bands: Int = 8, rowsPerBand: Int = 4, threshold: Double = 0.8,
-                     shingleN: Int = 1): Unit = {
-    val q = ingestStreamIndexed(spark, stateDir, inDir, outDir, checkpointDir,
-      bands, rowsPerBand, threshold, shingleN)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
   /** Batch twin of the indexed stream (the oracle-checked face, like
     * IngestStream.ingestBatchTwin): state lives as accreting
     * MATERIALIZED DataFrames instead of parquet partitions — each

@@ -73,17 +73,6 @@ object IngestStream {
       .start()
   }
 
-  /** Drain all currently-available input, then stop (test/dev). */
-  def runOnce(spark: SparkSession, corpusDir: String, inDir: String,
-              outDir: String, checkpointDir: String,
-              bands: Int = 8, rowsPerBand: Int = 4, threshold: Double = 0.8,
-              shingleN: Int = 1): Unit = {
-    val q = ingestStream(spark, corpusDir, inDir, outDir, checkpointDir,
-      bands, rowsPerBand, threshold, shingleN)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
   /** Batch twin of the accreting stream: `newDocs` partitioned into
     * `nBatches` by `batchOf` (a deterministic 0-based long expression)
     * and gated SEQUENTIALLY in batch order, each round's admissions

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -171,22 +171,4 @@ object Sessionize {
        |SELECT user_id, epoch_us(min(ts)) AS session_start_epoch,
        |  count(*) AS n_events, round(sum(value), 6) AS total_value
        |FROM s GROUP BY user_id, session_idx""".stripMargin
-
-  /** Run the streaming sessionization over a parquet dir (one shot). */
-  def runOnce(spark: SparkSession, dir: String, queryName: String): DataFrame = {
-    import spark.implicits._
-    val stream = spark.readStream.schema(EventsStream.eventsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-    val q = sessionizeStream(stream).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(queryName)
-  }
 }

@@ -1,8 +1,5 @@
 package graft.text
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Arabic text normalization — T2 (basic) and T3 (enhanced) in
   * SURVEY.md §2.3, reimplementing clean_arabic_text:
   *
@@ -17,12 +14,14 @@ import org.apache.spark.sql.functions._
   *     literal no-ops — same codepoints both sides — and are omitted;
   *     documented deviation none, semantics identical)
   *
-  * Three twin forms with one source of truth for the char tables:
-  *   - `normalizeBasic`/`normalizeEnhanced`: pure Scala, used inside the
-  *     typed mapPartitions OCR stage (per-span, off the SQL path);
-  *   - `*Col`: Catalyst Column expressions (whole-stage-codegen'd);
+  * Two twin forms here, with one source of truth for the char tables:
+  *   - pure Scala: the regex forms `normalizeBasic`/`normalizeEnhanced`
+  *     and their single-pass `*Fast` forms, which the typed OCR stage
+  *     and the native Catalyst expressions run;
   *   - `*Sql`: ANSI SQL text for the DuckDB oracle.
-  * ScalaCheck property tests pin all three to identical outputs.
+  * The third twin, declarative Catalyst Column forms built from the
+  * same tables, lives with the tests (`ReferenceNormalizer`); TwinSpec
+  * and the ScalaCheck properties pin all of them to identical outputs.
   *
   * Whitespace contract: the reference uses Python str.split() (any
   * Unicode whitespace); we standardize on ASCII whitespace `\s` which
@@ -166,20 +165,6 @@ object ArabicNormalizer {
       sb.append(if (i >= 0) TranslateTo.charAt(i) else c)
     }
     sb.toString
-  }
-
-  // ---- Catalyst Column twins (codegen-friendly, no UDF) ----------------
-
-  def normalizeBasicCol(c: Column): Column = {
-    val collapsed = trim(regexp_replace(coalesce(c, lit("")), "\\s+", " "))
-    trim(regexp_replace(translate(collapsed, TranslateFrom, TranslateTo), diacriticsClass, ""))
-  }
-
-  def normalizeEnhancedCol(c: Column): Column = {
-    val basic = regexp_replace(
-      translate(trim(regexp_replace(coalesce(c, lit("")), "\\s+", " ")), TranslateFrom, TranslateTo),
-      diacriticsClass, "")
-    trim(regexp_replace(regexp_replace(basic, "\\s+", " "), punctClass, "."))
   }
 
   // ---- SQL text twins (DuckDB dialect; RE2 regex, literal char classes) -

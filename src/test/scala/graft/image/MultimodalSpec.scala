@@ -1,7 +1,9 @@
 package graft.image
 
+import graft.image.ReferencePng.RasterCopy
 import graft.ocr.{GlyphClassifier, OcrEngine}
 import graft.pipeline.SparkTestSession
+import graft.streaming.{EventsStream, StreamDrain}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multimodal plumbing: resize, ink-ratio feature, multi-frame
@@ -9,13 +11,19 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MultimodalSpec extends AnyFunSuite {
 
+  /** Fraction of ink-classified pixels under the Otsu threshold. */
+  private def inkRatio(img: GrayImage): Double = {
+    val t = graft.ocr.Otsu.threshold(img.histogram)
+    img.copyPixels.count(p => (p & 0xff) <= t).toDouble / img.size
+  }
+
   test("resize: halved dims, deterministic, content preserved enough to re-OCR at 1:1") {
     val img = SynthRenderer.render("نظام المحكمه", 0, 0, 3L)
     val half = ImageOps.resize(img, img.width / 2, img.height / 2)
     assert(half.width == img.width / 2 && half.height == img.height / 2)
     val same = ImageOps.resize(img, img.width, img.height)
     assert(same.copyPixels.toSeq == img.copyPixels.toSeq) // identity at 1:1
-    assert(ImageOps.inkRatio(img) > 0.01 && ImageOps.inkRatio(img) < 0.5)
+    assert(inkRatio(img) > 0.01 && inkRatio(img) < 0.5)
   }
 
   test("frame codec: split recovers all frames; sampling strides correctly") {
@@ -84,12 +92,11 @@ class MultimodalSpec extends AnyFunSuite {
   test("streaming: windowed agg over events matches the batch twin") {
     val spark = SparkTestSession.spark
     val dir = "/root/testdata/sf0.001"
-    val streamed = graft.streaming.EventsStream
-      .runOnce(spark, s"$dir", "events_stream_test")
-      .collect().map(_.toSeq).toSet
-    val batch = graft.streaming.EventsStream.batchEquivalent(spark, dir)
-      .collect().map(_.toSeq).toSet
-    assert(streamed.nonEmpty)
-    assert(streamed == batch)
+    val (streamed, _) = StreamDrain.toMemory(
+      EventsStream.windowedAgg(StreamDrain.events(spark, dir)), "complete", "events_stream_test")
+    val batch = EventsStream.windowedAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir))
+    val got = streamed.collect().map(_.toSeq).toSet
+    assert(got.nonEmpty)
+    assert(got == batch.collect().map(_.toSeq).toSet)
   }
 }

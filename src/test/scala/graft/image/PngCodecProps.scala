@@ -1,5 +1,6 @@
 package graft.image
 
+import graft.image.ReferencePng.RasterCopy
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.propBoolean
 

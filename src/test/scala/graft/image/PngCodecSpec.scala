@@ -1,5 +1,6 @@
 package graft.image
 
+import graft.image.ReferencePng.RasterCopy
 import org.scalatest.funsuite.AnyFunSuite
 
 /** From-scratch PNG codec: round-trip exactness, multi-block zlib

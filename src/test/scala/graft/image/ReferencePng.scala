@@ -12,6 +12,15 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   */
 object ReferencePng {
 
+  /** `img.copyPixels`: the exact-size raster copy the image specs
+    * compare with `Arrays.equals` (a GrayImage may be a view at an
+    * offset into a larger payload).
+    */
+  implicit class RasterCopy(private val img: GrayImage) extends AnyVal {
+    def copyPixels: Array[Byte] =
+      java.util.Arrays.copyOfRange(img.pixels, img.offset, img.offset + img.size)
+  }
+
   private def readIntBE(a: Array[Byte], at: Int): Int =
     ((a(at) & 0xff) << 24) | ((a(at + 1) & 0xff) << 16) | ((a(at + 2) & 0xff) << 8) | (a(at + 3) & 0xff)
 

@@ -1,6 +1,7 @@
 package graft.ocr
 
 import graft.image._
+import graft.image.ReferencePng.RasterCopy
 import graft.image.SynthFont._
 import graft.text.ArabicNormalizer
 import org.scalatest.funsuite.AnyFunSuite
@@ -137,7 +138,7 @@ class OcrCoreSpec extends AnyFunSuite {
     for (angle <- Seq(-3000, -1750, -250, 0, 250, 1500, 3000)) {
       val img = SynthRenderer.render(text, angle, 1000, 11L)
       val bin = Otsu.binarize(img)
-      val detected = Deskew.detectAngle(bin)
+      val detected = Deskew.rankedAngles(bin).head
       // exactness requirement is on the restored raster, not the angle id:
       val a = Deskew.unshear(bin, detected)
       val b = Deskew.unshear(bin, angle)

@@ -376,7 +376,7 @@ class OperatorsSpec extends AnyFunSuite {
       (501L, "one two", "en")).toDF("doc_id", "text", "lang"))
     val native = df.select($"doc_id", Dedup.shingleHashesCol($"text", 3).as("h"))
       .as[(Long, Seq[Long])].collect().toMap
-    val twin = df.select($"doc_id", Dedup.shinglesCol($"text", 3).as("s"))
+    val twin = df.select($"doc_id", ReferenceColumns.shinglesCol($"text", 3).as("s"))
       .as[(Long, Seq[String])].collect().toMap
     twin.foreach { case (id, shingles) =>
       val want = shingles.map(s => graft.functions.SketchKernels.combinedHash(

@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Catalyst-HOF reference forms of the native embedding kernels — the
-  * twins SketchSpec pins the native expressions against, bit for bit.
+/** Catalyst-HOF reference forms of the native embedding and shingle
+  * kernels — the twins SketchSpec and OperatorsSpec pin the native
+  * expressions against, bit for bit.
   * Interpreted HOFs allocate per element per row, so none of these is
   * a hot path; they exist only to state each kernel's semantics in
   * plain Spark functions.
@@ -54,4 +55,17 @@ object ReferenceColumns {
   def ivfProbeCellsColRef(emb: Column, centroids: Array[(Int, Array[Double])], nProbe: Int): Column =
     transform(slice(array_sort(cellStructsCol(emb, centroids)), 1, nProbe),
       s => s.getField("cell"))
+
+  /** Distinct word n-gram shingle STRINGS (n consecutive words joined
+    * with one space) — what `Dedup.shingleHashesCol` hashes without
+    * building them. Docs with fewer than n words shingle to an empty
+    * set.
+    */
+  def shinglesCol(text: Column, n: Int): Column = {
+    val w = Dedup.wordSeqCol(text)
+    when(size(w) >= n,
+      array_distinct(transform(sequence(lit(0), size(w) - n),
+        i => array_join(slice(w, i + 1, lit(n)), " "))))
+      .otherwise(array().cast("array<string>"))
+  }
 }

@@ -37,7 +37,8 @@ class StreamingSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(dir)
     }
 
-    val got = Sessionize.runOnce(spark, dir, s"sess_${System.nanoTime()}")
+    val got = StreamDrain.toMemory(Sessionize.sessionizeStream(StreamDrain.typedEvents(spark, dir)),
+        "append", s"sess_${System.nanoTime()}")._1
       .select(col("user_id"), unix_timestamp(col("session_start")).as("start_epoch"),
         col("n_events"), col("total_value"))
       .as[(Long, Long, Long, Double)].collect().toSet
@@ -78,7 +79,7 @@ class StreamingSpec extends AnyFunSuite {
     all.drop(20).toSeq.toDS().write.mode("append").parquet(inDir)
 
     val cfg = graft.pipeline.ExtractionJob.Config(numPartitions = 4)
-    DocsStream.runOnce(spark, inDir, outDir, ckDir, cfg)
+    StreamDrain.drain(DocsStream.extractStream(spark, inDir, outDir, ckDir, cfg))
     def readOut() = spark.read.parquet(outDir)
       .select(col("doc_id"), to_json(col("spans")).as("spans_json"))
       .as[(String, String)].collect().toMap
@@ -91,7 +92,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // restart against the same checkpoint: all input already committed,
     // so nothing is reprocessed and the output is unchanged
-    DocsStream.runOnce(spark, inDir, outDir, ckDir, cfg)
+    StreamDrain.drain(DocsStream.extractStream(spark, inDir, outDir, ckDir, cfg))
     assert(readOut() == want, "restart must not duplicate or alter extracted output")
   }
 
@@ -125,7 +126,7 @@ class StreamingSpec extends AnyFunSuite {
       Thread.sleep(1200) // distinct mod times: file order == batch order
     }
 
-    IngestStream.runOnce(spark, corpusDir, inDir, outDir, ckDir)
+    StreamDrain.drain(IngestStream.ingestStream(spark, corpusDir, inDir, outDir, ckDir))
     def readOut() = spark.read.parquet(outDir).select("doc_id", "batch_id")
       .as[(Long, Long)].collect().toSet
     val got = readOut()
@@ -136,7 +137,7 @@ class StreamingSpec extends AnyFunSuite {
     // nothing replays and no admission flips (the sink's batch-id
     // partitions + the strictly-earlier-batches read rule make replay
     // idempotent by construction — this pins the committed-path half)
-    IngestStream.runOnce(spark, corpusDir, inDir, outDir, ckDir)
+    StreamDrain.drain(IngestStream.ingestStream(spark, corpusDir, inDir, outDir, ckDir))
     assert(readOut() == got, "restart must not duplicate or alter admissions")
 
     // the batch twin restates the same sequencing
@@ -195,7 +196,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     rmTree(corpusDir)
 
-    IngestIndex.runOnceIndexed(spark, stateDir, inDir, outDir, ckDir)
+    StreamDrain.drain(IngestIndex.ingestStreamIndexed(spark, stateDir, inDir, outDir, ckDir))
     def readOut() = spark.read.parquet(outDir).select("doc_id", "batch_id")
       .as[(Long, Long)].collect().toSet
     val got = readOut()
@@ -204,7 +205,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // restart: committed batches must not replay or flip admissions,
     // and the state partitions must not duplicate
-    IngestIndex.runOnceIndexed(spark, stateDir, inDir, outDir, ckDir)
+    StreamDrain.drain(IngestIndex.ingestStreamIndexed(spark, stateDir, inDir, outDir, ckDir))
     assert(readOut() == got, "restart must not duplicate or alter admissions")
 
     // state accreted exactly the admitted docs' slices
@@ -435,8 +436,8 @@ class StreamingSpec extends AnyFunSuite {
     Seq((11L, reworded), (13L, orig)).toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(inDir)
 
-    IngestStream.runOnce(spark, corpusDir, inDir, outDir, ckDir,
-      threshold = 0.5, shingleN = 3)
+    StreamDrain.drain(IngestStream.ingestStream(spark, corpusDir, inDir, outDir, ckDir,
+      threshold = 0.5, shingleN = 3))
     val got = spark.read.parquet(outDir).select("doc_id").as[Long].collect().toSet
     assert(got == Set(11L),
       s"trigram gate must admit the reworded doc and reject the verbatim copy, got $got")
@@ -471,8 +472,9 @@ class StreamingSpec extends AnyFunSuite {
       df.select(col("window_start").cast("long"), col("event_type"),
         col("n_with_k"), col("sum_k"))
         .as[(Long, String, Long, Option[Long])].collect().toSet
-    val got = norm(EventsStream.runJsonOnce(spark, dir, s"json_${System.nanoTime()}"))
-    val want = norm(EventsStream.jsonBatchEquivalent(spark, dir))
+    val got = norm(StreamDrain.toMemory(EventsStream.jsonWindowedAgg(StreamDrain.events(spark, dir)),
+      "complete", s"json_${System.nanoTime()}")._1)
+    val want = norm(EventsStream.jsonWindowedAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir)))
     assert(got == want && got.nonEmpty, s"stream $got != twin $want")
   }
 
@@ -504,7 +506,8 @@ class StreamingSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(dir)
       Thread.sleep(1100)
     }
-    val out = EventsStream.runHeavyOnce(spark, dir, s"sthh_${System.nanoTime()}")
+    val out = StreamDrain.toMemory(EventsStream.heavyHittersWindowedAgg(StreamDrain.events(spark, dir)),
+        "complete", s"sthh_${System.nanoTime()}")._1
       .select(col("window_start_ms"), col("hh"), col("n"))
       .as[(Long, Seq[(String, Long)], Long)].collect()
     assert(out.length == 2)
@@ -561,8 +564,9 @@ class StreamingSpec extends AnyFunSuite {
     }
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long)].collect().toSet
-    val got = norm(EventsStream.runFunnelOnce(spark, dir, s"funnel_${System.nanoTime()}"))
-    val want = norm(EventsStream.funnelBatchEquivalent(spark, dir))
+    val got = norm(StreamDrain.toMemory(EventsStream.funnelAgg(StreamDrain.events(spark, dir)),
+      "complete", s"funnel_${System.nanoTime()}")._1)
+    val want = norm(EventsStream.funnelAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir)))
     assert(got == want, s"stream $got != twin $want")
     assert(got == Set((1L, 3L), (2L, 1L), (3L, 2L), (4L, 2L)),
       s"funnel semantics drifted: $got")
@@ -587,15 +591,16 @@ class StreamingSpec extends AnyFunSuite {
       df.select(col("window_start").cast("long"), col("n_name"),
         col("n"), col("total_value"))
         .as[(Long, String, Long, Double)].collect().toSet
-    val got = norm(EventsStream.runEnrichedOnce(spark, dir, dim, s"enrich_${System.nanoTime()}"))
-    val want = norm(EventsStream.enrichedBatchEquivalent(spark, dir, dim))
+    val got = norm(StreamDrain.toMemory(EventsStream.enrichedAgg(StreamDrain.events(spark, dir), dim),
+      "complete", s"enrich_${System.nanoTime()}")._1)
+    val want = norm(EventsStream.enrichedAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir), dim))
     assert(got == want && got.nonEmpty, s"stream $got != twin $want")
     // nation 0 collects users 0, 25, 50 (minutes 0/1/3 — one window)
     // across BOTH micro-batches
     assert(got.exists { case (_, name, n, tv) => name == "NATION_0" && n == 3 && tv == 12.0 })
     assert(got.exists { case (_, name, n, tv) => name == "NATION_7" && n == 1 && tv == 16.0 })
     // the twin's join side is a broadcast hash join, never a shuffle
-    val plan = EventsStream.enrichedBatchEquivalent(spark, dir, dim)
+    val plan = EventsStream.enrichedAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir), dim)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(800))
   }
@@ -624,7 +629,8 @@ class StreamingSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(dir)
       Thread.sleep(1100)
     }
-    val got = EventsStream.runAnomalyOnce(spark, dir, s"anom_${System.nanoTime()}")
+    val got = StreamDrain.toMemory(EventsStream.anomalyStream(StreamDrain.typedEvents(spark, dir)),
+        "append", s"anom_${System.nanoTime()}")._1
       .select("user_id", "window_start_ms", "event_id", "value", "z")
       .as[(Long, Long, Long, Double, Double)].collect().toSet
     val want = EventsStream.anomalyBatch(
@@ -654,8 +660,11 @@ class StreamingSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(dir)
       Thread.sleep(1100) // distinct mod times: file order == day order
     }
-    val (_, stateRows) = EventsStream.runAnomalyWithStateRows(
-      spark, dir, s"anom_evict_${System.nanoTime()}")
+    val (_, q) = StreamDrain.toMemory(EventsStream.anomalyStream(StreamDrain.typedEvents(spark, dir)),
+      "append", s"anom_evict_${System.nanoTime()}")
+    // numRowsTotal from each micro-batch's progress event
+    val stateRows = q.recentProgress.toSeq
+      .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
     assert(stateRows.size >= nDays - 1, s"expected one progress per batch, got $stateRows")
     // history would be 3 users x 10 windows = 30 keys. In-flight is at
     // most 3 windows per user: the open one, the previous one (its end
@@ -690,7 +699,8 @@ class StreamingSpec extends AnyFunSuite {
         .coalesce(1).write.mode("append").parquet(dir)
       Thread.sleep(1100)
     }
-    val got = EventsStream.runQuantilesOnce(spark, dir, s"quant_${System.nanoTime()}")
+    val got = StreamDrain.toMemory(EventsStream.quantilesWindowedAgg(StreamDrain.events(spark, dir)),
+        "complete", s"quant_${System.nanoTime()}")._1
       .select("window_start_ms", "n", "ap")
       .as[(Long, Long, Seq[Double])].collect()
       .filter(_._1 == day).toList
@@ -738,7 +748,8 @@ class StreamingSpec extends AnyFunSuite {
     Thread.sleep(1500)
     write(file2)
 
-    val got = EventsStream.runDedupOnce(spark, dir, s"sdedup_${System.nanoTime()}")
+    val got = StreamDrain.toMemory(EventsStream.dedupStream(StreamDrain.typedEvents(spark, dir)),
+        "append", s"sdedup_${System.nanoTime()}")._1
       .select(col("user_id"), col("event_type"), col("event_id"))
       .as[(Long, String, Long)].collect().toSet
     val want = EventsStream.dedupBatch(spark.read.schema(EventsStream.eventsSchema).parquet(dir))
@@ -766,7 +777,8 @@ class StreamingSpec extends AnyFunSuite {
     write(Seq(ev(1, 10))) // batch 1: the key's first ARRIVAL
     Thread.sleep(1500)
     write(Seq(ev(2, 0))) // batch 2: globally EARLIER event arrives later
-    val got = EventsStream.runDedupOnce(spark, dir, s"sdedupdiv_${System.nanoTime()}")
+    val got = StreamDrain.toMemory(EventsStream.dedupStream(StreamDrain.typedEvents(spark, dir)),
+        "append", s"sdedupdiv_${System.nanoTime()}")._1
       .select(col("event_id")).as[Long].collect().toSet
     val batchTwin = EventsStream.dedupBatch(
         spark.read.schema(EventsStream.eventsSchema).parquet(dir))
@@ -804,8 +816,8 @@ class StreamingSpec extends AnyFunSuite {
     write(Seq(ev(200, 3, 310)))
     Thread.sleep(1500)
     write(Seq(ev(3, 1, 320)))
-    val got = EventsStream.runDedupTtlOnce(spark, dir, s"sdedupttl_${System.nanoTime()}",
-        watermarkDelay = "10 minutes", ttlMs = 60L * 60000L)
+    val got = StreamDrain.toMemory(EventsStream.dedupStreamTtl(StreamDrain.typedEvents(spark, dir),
+        watermarkDelay = "10 minutes", ttlMs = 60L * 60000L), "append", s"sdedupttl_${System.nanoTime()}")._1
       .select(col("event_id")).as[Long].collect().toSet
     assert(got == Set(1L, 100L, 200L, 3L),
       s"TTL dedup: want dup 2 suppressed and key 1 re-admitted after expiry, got $got")
@@ -833,8 +845,8 @@ class StreamingSpec extends AnyFunSuite {
     write(Seq(ev(1, 1, 0), ev(100, 2, 400)))
     Thread.sleep(1500)
     write(Seq(ev(3, 1, 500)))
-    val got = EventsStream.runDedupTtlOnce(spark, dir, s"sdedupttl2_${System.nanoTime()}",
-        watermarkDelay = "10 minutes", ttlMs = 60L * 60000L)
+    val got = StreamDrain.toMemory(EventsStream.dedupStreamTtl(StreamDrain.typedEvents(spark, dir),
+        watermarkDelay = "10 minutes", ttlMs = 60L * 60000L), "append", s"sdedupttl2_${System.nanoTime()}")._1
       .select(col("event_id")).as[Long].collect().toSet
     assert(got == Set(1L, 100L, 3L),
       s"post-horizon event of an always-active key must re-admit, got $got")
@@ -864,7 +876,8 @@ class StreamingSpec extends AnyFunSuite {
     Thread.sleep(1500) // distinct mod times: file order == write order
     write(file2)
 
-    val got = Sessionize.runOnce(spark, dir, s"sess_ooo_${System.nanoTime()}")
+    val got = StreamDrain.toMemory(Sessionize.sessionizeStream(StreamDrain.typedEvents(spark, dir)),
+        "append", s"sess_ooo_${System.nanoTime()}")._1
       .select(col("user_id"), unix_timestamp(col("session_start")).as("start_epoch"),
         col("n_events"), col("total_value"))
       .as[(Long, Long, Long, Double)].collect().toSet

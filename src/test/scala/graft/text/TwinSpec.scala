@@ -29,7 +29,7 @@ class TwinSpec extends AnyFunSuite {
   test("normalizeBasic: Scala twin == Column twin on 400 adversarial strings") {
     val inputs = randomStrings(400)
     val got = inputs.toDF("s")
-      .select(ArabicNormalizer.normalizeBasicCol(col("s")).as("n")).as[String].collect()
+      .select(ReferenceNormalizer.normalizeBasicCol(col("s")).as("n")).as[String].collect()
     inputs.zip(got).foreach { case (in, colResult) =>
       assert(ArabicNormalizer.normalizeBasic(in) == colResult, s"input=${in.map(c => f"U+${c.toInt}%04x").mkString(",")}")
     }
@@ -38,7 +38,7 @@ class TwinSpec extends AnyFunSuite {
   test("normalizeEnhanced: Scala twin == Column twin") {
     val inputs = randomStrings(400)
     val got = inputs.toDF("s")
-      .select(ArabicNormalizer.normalizeEnhancedCol(col("s")).as("n")).as[String].collect()
+      .select(ReferenceNormalizer.normalizeEnhancedCol(col("s")).as("n")).as[String].collect()
     inputs.zip(got).foreach { case (in, colResult) =>
       assert(ArabicNormalizer.normalizeEnhanced(in) == colResult, s"input=$in")
     }
