@@ -94,7 +94,7 @@ class MultimodalSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val (streamed, _) = StreamDrain.toMemory(
       EventsStream.windowedAgg(StreamDrain.events(spark, dir)), "complete", "events_stream_test")
-    val batch = EventsStream.windowedAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir))
+    val batch = EventsStream.windowedAgg(StreamDrain.batchEvents(spark, dir))
     val got = streamed.collect().map(_.toSeq).toSet
     assert(got.nonEmpty)
     assert(got == batch.collect().map(_.toSeq).toSet)

@@ -18,6 +18,12 @@ object StreamDrain {
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
 
+  /** The same files read as one batch: the twin side of each stream
+    * check.
+    */
+  def batchEvents(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(EventsStream.eventsSchema).parquet(dir)
+
   /** The same source typed as the custom-state operators' input. */
   def typedEvents(spark: SparkSession, dir: String): Dataset[Sessionize.Event] = {
     import spark.implicits._

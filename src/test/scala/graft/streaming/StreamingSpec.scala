@@ -43,8 +43,7 @@ class StreamingSpec extends AnyFunSuite {
         col("n_events"), col("total_value"))
       .as[(Long, Long, Long, Double)].collect().toSet
 
-    val batch = Sessionize.sessionizeBatch(
-        spark.read.schema(EventsStream.eventsSchema).parquet(dir))
+    val batch = Sessionize.sessionizeBatch(StreamDrain.batchEvents(spark, dir))
       .select(col("user_id"), unix_timestamp(col("session_start")).as("start_epoch"),
         col("n_events"), col("total_value"))
       .as[(Long, Long, Long, Double)].collect().toSet
@@ -474,7 +473,7 @@ class StreamingSpec extends AnyFunSuite {
         .as[(Long, String, Long, Option[Long])].collect().toSet
     val got = norm(StreamDrain.toMemory(EventsStream.jsonWindowedAgg(StreamDrain.events(spark, dir)),
       "complete", s"json_${System.nanoTime()}")._1)
-    val want = norm(EventsStream.jsonWindowedAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir)))
+    val want = norm(EventsStream.jsonWindowedAgg(StreamDrain.batchEvents(spark, dir)))
     assert(got == want && got.nonEmpty, s"stream $got != twin $want")
   }
 
@@ -566,7 +565,7 @@ class StreamingSpec extends AnyFunSuite {
       df.as[(Long, Long)].collect().toSet
     val got = norm(StreamDrain.toMemory(EventsStream.funnelAgg(StreamDrain.events(spark, dir)),
       "complete", s"funnel_${System.nanoTime()}")._1)
-    val want = norm(EventsStream.funnelAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir)))
+    val want = norm(EventsStream.funnelAgg(StreamDrain.batchEvents(spark, dir)))
     assert(got == want, s"stream $got != twin $want")
     assert(got == Set((1L, 3L), (2L, 1L), (3L, 2L), (4L, 2L)),
       s"funnel semantics drifted: $got")
@@ -593,15 +592,15 @@ class StreamingSpec extends AnyFunSuite {
         .as[(Long, String, Long, Double)].collect().toSet
     val got = norm(StreamDrain.toMemory(EventsStream.enrichedAgg(StreamDrain.events(spark, dir), dim),
       "complete", s"enrich_${System.nanoTime()}")._1)
-    val want = norm(EventsStream.enrichedAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir), dim))
+    val twin = EventsStream.enrichedAgg(StreamDrain.batchEvents(spark, dir), dim)
+    val want = norm(twin)
     assert(got == want && got.nonEmpty, s"stream $got != twin $want")
     // nation 0 collects users 0, 25, 50 (minutes 0/1/3 — one window)
     // across BOTH micro-batches
     assert(got.exists { case (_, name, n, tv) => name == "NATION_0" && n == 3 && tv == 12.0 })
     assert(got.exists { case (_, name, n, tv) => name == "NATION_7" && n == 1 && tv == 16.0 })
     // the twin's join side is a broadcast hash join, never a shuffle
-    val plan = EventsStream.enrichedAgg(spark.read.schema(EventsStream.eventsSchema).parquet(dir), dim)
-      .queryExecution.executedPlan.toString
+    val plan = twin.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(800))
   }
 
@@ -633,8 +632,7 @@ class StreamingSpec extends AnyFunSuite {
         "append", s"anom_${System.nanoTime()}")._1
       .select("user_id", "window_start_ms", "event_id", "value", "z")
       .as[(Long, Long, Long, Double, Double)].collect().toSet
-    val want = EventsStream.anomalyBatch(
-        spark.read.schema(EventsStream.eventsSchema).parquet(dir))
+    val want = EventsStream.anomalyBatch(StreamDrain.batchEvents(spark, dir))
       .where(col("user_id") =!= 99) // the pusher's window never closes
       .as[(Long, Long, Long, Double, Double)].collect().toSet
     assert(want.map(_._3) == Set(109L, 304L), s"twin fixture sanity: $want")
@@ -716,8 +714,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     // exact fields match the batch twin exactly (sketch values may
     // legitimately differ by merge order — contract-only for those)
-    val twinN = EventsStream.quantilesWindowedAgg(
-        spark.read.schema(EventsStream.eventsSchema).parquet(dir))
+    val twinN = EventsStream.quantilesWindowedAgg(StreamDrain.batchEvents(spark, dir))
       .select("window_start_ms", "n").as[(Long, Long)].collect().toSet
     assert(twinN.contains((day, 200L)), s"twin n mismatch: $twinN")
   }
@@ -752,7 +749,7 @@ class StreamingSpec extends AnyFunSuite {
         "append", s"sdedup_${System.nanoTime()}")._1
       .select(col("user_id"), col("event_type"), col("event_id"))
       .as[(Long, String, Long)].collect().toSet
-    val want = EventsStream.dedupBatch(spark.read.schema(EventsStream.eventsSchema).parquet(dir))
+    val want = EventsStream.dedupBatch(StreamDrain.batchEvents(spark, dir))
       .select(col("user_id"), col("event_type"), col("event_id"))
       .as[(Long, String, Long)].collect().toSet
     assert(want == Set((1L, "click", 2L), (2L, "click", 3L), (2L, "purchase", 6L), (3L, "view", 7L)))
@@ -780,8 +777,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = StreamDrain.toMemory(EventsStream.dedupStream(StreamDrain.typedEvents(spark, dir)),
         "append", s"sdedupdiv_${System.nanoTime()}")._1
       .select(col("event_id")).as[Long].collect().toSet
-    val batchTwin = EventsStream.dedupBatch(
-        spark.read.schema(EventsStream.eventsSchema).parquet(dir))
+    val batchTwin = EventsStream.dedupBatch(StreamDrain.batchEvents(spark, dir))
       .select(col("event_id")).as[Long].collect().toSet
     assert(got == Set(1L), s"stream must keep the first-ARRIVED event: $got")
     assert(batchTwin == Set(2L), s"batch twin must keep the earliest EVENT-TIME one: $batchTwin")
@@ -881,8 +877,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("user_id"), unix_timestamp(col("session_start")).as("start_epoch"),
         col("n_events"), col("total_value"))
       .as[(Long, Long, Long, Double)].collect().toSet
-    val batch = Sessionize.sessionizeBatch(
-        spark.read.schema(EventsStream.eventsSchema).parquet(dir))
+    val batch = Sessionize.sessionizeBatch(StreamDrain.batchEvents(spark, dir))
       .select(col("user_id"), unix_timestamp(col("session_start")).as("start_epoch"),
         col("n_events"), col("total_value"))
       .as[(Long, Long, Long, Double)].collect().toSet
